@@ -20,6 +20,7 @@ from __future__ import annotations
 import datetime as _dt
 import hashlib
 import secrets
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
@@ -69,6 +70,11 @@ class AuthService:
         assert clients.schema == CLIENTS_SCHEMA
         self.users = users
         self.clients = clients
+        # current_user's memo: token -> user, valid only at _memo_versions
+        # (the users and clients head versions it was computed at)
+        self._memo_lock = threading.Lock()
+        self._memo_versions: tuple[int, int] | None = None
+        self._memo: dict[str, dict] = {}
 
     def _rmw(self, spark: SparkSession, table: SnapshotTable, build, attempts: int = 5):
         """Optimistic read-modify-write: every auth mutation derives its new
@@ -197,10 +203,38 @@ class AuthService:
 
     # -- current user from token (B/web/dependencies.py:15-47) -------------
     def current_user(self, spark: SparkSession, token: str) -> dict:
+        """Resolve ``token`` to its user, memoized per head version.
+
+        Every request resolves its token, and a resolution is two Spark
+        collects. The answer depends only on the ``users`` and ``clients``
+        snapshots, so it is memoized under their head versions (one small
+        manifest read each) and the two reads are pinned to exactly those
+        versions. Any write to either table — login, logout, signup, a
+        tenant deactivation, from this process or another — moves a
+        version and drops the whole memo, so it holds only the tokens
+        seen since the last auth write. Failures are never memoized."""
         if not token:
             raise AuthError("Not authenticated")
+        versions = (
+            self.users.current_doc().version,
+            self.clients.current_doc().version,
+        )
+        with self._memo_lock:
+            if self._memo_versions != versions:
+                self._memo_versions, self._memo = versions, {}
+            hit = self._memo.get(token)
+        if hit is None:
+            hit = self._resolve(spark, token, *versions)
+            with self._memo_lock:
+                if self._memo_versions == versions:
+                    self._memo[token] = hit
+        return dict(hit)
+
+    def _resolve(
+        self, spark: SparkSession, token: str, users_v: int, clients_v: int
+    ) -> dict:
         row = (
-            self.users.read(spark)
+            self.users.read(spark, version=users_v)
             .filter((F.col("session_token") == token) & F.col("active"))
             .limit(1)
             .collect()
@@ -209,7 +243,7 @@ class AuthService:
             raise AuthError("Not authenticated")
         u = row[0].asDict()
         client = (
-            self.clients.read(spark)
+            self.clients.read(spark, version=clients_v)
             .filter((F.col("id") == u["client_id"]) & F.col("active"))
             .limit(1)
             .collect()

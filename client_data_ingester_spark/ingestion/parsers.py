@@ -8,7 +8,9 @@ Two source kinds per reader:
 - a **path** (file/dir/glob): read distributed by executors — the scale path;
   the uploaded file never has to be driver-resident.
 - **bytes/str** (HTTP upload body): parsed driver-side (request-sized by
-  definition) and parallelized; same downstream pipeline.
+  definition) into a pyarrow table that ``createDataFrame`` ships to the
+  JVM as Arrow batches — no Python worker and no per-row ``toInternal``;
+  same downstream pipeline.
 
 Row order is semantically meaningful (later rows win on duplicate SKUs —
 SURVEY §2.3 J4), so every reader attaches ``_row_idx`` at the source via
@@ -28,6 +30,7 @@ import io
 import json
 from typing import Callable, Union
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -54,20 +57,25 @@ def _df_from_rows(
 ) -> DataFrame:
     header = [h.strip() for h in header]
     schema = _all_string_schema(header).add(ROW_IDX_COL, T.LongType(), False)
-    data = [(*r, i) for i, r in enumerate(rows)]
-    # Right-size parallelism to the payload instead of defaultParallelism:
-    # a bare createDataFrame slices even a 100-row upload into one
-    # partition per core, and EVERY downstream stage of the ingest
-    # (validation fold, merge join, staging write) then schedules ~cores
-    # tasks for a handful of rows — measured ~0.5-1.0 s per commit of
-    # pure task overhead at local[32]. Driver-side byte payloads are
-    # request-sized by definition (the path branch stays distributed),
-    # so ~50k rows per slice keeps small uploads single-partition while
-    # genuinely large bodies still spread.
-    slices = max(1, min(len(data) // 50_000 + 1, 64))
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(data, slices), schema=schema
+    # Column-wise Arrow arrays, named positionally: a dict keyed by name
+    # would merge duplicate header names, which must stay distinct columns
+    # (mapping resolves them last-file-column-wins).
+    columns = list(zip(*rows)) if rows else [()] * len(header)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=pa.string()) for c in columns]
+        + [pa.array(range(len(rows)), type=pa.int64())],
+        names=[*header, ROW_IDX_COL],
     )
+    # The Arrow relation arrives split into min(rows, defaultParallelism)
+    # partitions, and EVERY downstream stage of the ingest (validation
+    # fold, merge join, staging write) would then schedule ~cores tasks
+    # for a handful of rows — measured ~0.5-1.0 s per commit of pure task
+    # overhead at local[32]. Byte payloads are request-sized by definition
+    # (the path branch stays distributed), so coalescing to ~50k rows per
+    # slice keeps uploads of up to 50k rows single-partition while
+    # genuinely large bodies still spread.
+    slices = max(1, min(-(-len(rows) // 50_000), 64))
+    return spark.createDataFrame(table, schema=schema).coalesce(slices)
 
 
 def read_csv(spark: SparkSession, source: Source) -> DataFrame:
@@ -80,12 +88,10 @@ def read_csv(spark: SparkSession, source: Source) -> DataFrame:
             # empty payload: no header, no rows — parity with DictReader
             # yielding nothing (ingest reports success, 0 processed)
             return _df_from_rows(spark, [], [])
-        rows = [
-            [cell if cell is not None else None for cell in row]
-            + [None] * (len(header) - len(row))
-            for row in reader
-        ]
-        rows = [r[: len(header)] for r in rows]
+        # short rows are padded with nulls (missing trailing cells),
+        # long rows cut to the header's width
+        width = len(header)
+        rows = [(row + [None] * (width - len(row)))[:width] for row in reader]
         return _df_from_rows(spark, header, rows)
     df = (
         spark.read.option("header", True)

@@ -38,13 +38,12 @@ import datetime as _dt
 import random
 import time
 from dataclasses import dataclass, field
-from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import CLIENT_PRODUCTS_SCHEMA
+from ..schemas import CLIENT_PRODUCTS_SCHEMA, sql_ident as _q
 from ..tables.snapshot import SnapshotConflictError, SnapshotTable
 from .mapping import CompiledMapping, ParserConfig, compile_mapping
 from .parsers import ROW_IDX_COL, Source, get_parser
@@ -101,14 +100,28 @@ def _batch_timestamp() -> _dt.datetime:
 
 
 _MONO_STRIDE = 1 << 33  # monotonically_increasing_id partition stride
+# SQL text of the row index's partition id (upper bits) and in-partition
+# position (lower bits) under monotonically_increasing_id
+_MONO_PID = f"shiftright({ROW_IDX_COL}, 33)"
+_MONO_LOW = f"({ROW_IDX_COL} & {_MONO_STRIDE - 1})"
+# the per-partition aggregate the dense row-index rewrite needs
+_MAXN_AGG = f"max({_MONO_LOW}) AS _maxn"
 
 
-def _mono_pid() -> F.Column:
-    return F.shiftright(F.col(ROW_IDX_COL), 33)
+def _ts_literal(ts: _dt.datetime) -> str:
+    """A naive datetime as a TIMESTAMP_NTZ literal: the exact wall-clock
+    value, independent of the session and Python process time zones."""
+    return f"TIMESTAMP_NTZ '{ts.isoformat(sep=' ')}'"
 
 
-def _mono_low() -> F.Column:
-    return F.col(ROW_IDX_COL).bitwiseAND(F.lit(_MONO_STRIDE - 1))
+def _per_partition(staged: DataFrame, *aggs: str) -> list:
+    """Collect the SQL aggregates ``aggs`` grouped by the row index's
+    source partition."""
+    return (
+        staged.groupBy(F.expr(f"{_MONO_PID} AS _pid"))
+        .agg(*[F.expr(a) for a in aggs])
+        .collect()
+    )
 
 
 def _apply_dense_idx(
@@ -128,17 +141,14 @@ def _apply_dense_idx(
     if len(offsets) == 1 and 0 in offsets:
         # already dense (driver-side parsers emit 0..n-1 directly)
         return staged, acc
-    mapping = F.create_map(
-        *[
-            F.lit(x)
-            for p, o in offsets.items()
-            for x in (int(p), int(o))
-        ]
-    )
+    pairs = ", ".join(f"{p}, {o}" for p, o in offsets.items())
     return (
         staged.withColumn(
             ROW_IDX_COL,
-            (F.element_at(mapping, _mono_pid()) + _mono_low()).cast("long"),
+            F.expr(
+                f"CAST(element_at(map({pairs}), {_MONO_PID}) + {_MONO_LOW}"
+                " AS BIGINT)"
+            ),
         ),
         acc,
     )
@@ -165,12 +175,7 @@ def dense_row_idx(staged: DataFrame) -> "tuple[DataFrame, int]":
     service folds this aggregate INTO its validation job (one Spark
     action serves both — see ``_ingest``); this standalone form is the
     streaming path's entry point."""
-    per = (
-        staged.groupBy(_mono_pid().alias("_pid"))
-        .agg(F.max(_mono_low()).alias("_maxn"))
-        .collect()
-    )
-    return _apply_dense_idx(staged, per)
+    return _apply_dense_idx(staged, _per_partition(staged, _MAXN_AGG))
 
 
 def fold_duplicate_skus(updates: DataFrame, mapped_cols: list[str]) -> DataFrame:
@@ -187,16 +192,17 @@ def fold_duplicate_skus(updates: DataFrame, mapped_cols: list[str]) -> DataFrame
     window(last-ignorenulls) + reverse-sort row_number form paid two
     per-partition sorts on the ingest path's biggest shuffle.
     """
+    ri = _q(ROW_IDX_COL)
     return updates.groupBy("sku").agg(
         *[
-            F.max_by(
-                F.col(c),
-                F.when(F.col(c).isNotNull(), F.col(ROW_IDX_COL)),
-            ).alias(c)
+            F.expr(
+                f"max_by({_q(c)}, CASE WHEN {_q(c)} IS NOT NULL THEN {ri} END)"
+                f" AS {_q(c)}"
+            )
             for c in mapped_cols
             if c != "sku"
         ],
-        F.max(ROW_IDX_COL).alias(ROW_IDX_COL),
+        F.expr(f"max({ri}) AS {ri}"),
     )
 
 
@@ -213,113 +219,95 @@ def merge_products(
 
     Shared by the batch service and the streaming foreachBatch path. One
     shuffle (the full-outer join on sku); everything else is narrow.
+
+    The projections are SQL text (``selectExpr``), not Column trees: a
+    Column expression costs py4j round trips per node, and this plan is
+    rebuilt on every ingest and every conflict retry — the text form is
+    a handful of calls whatever the column count.
     """
-    ts = F.lit(batch_ts).cast("timestamp_ntz")
-    nonempty = updates.filter(F.length(F.col("sku")) > 0)
-    empty = updates.filter(F.length(F.col("sku")) == 0)
+    ts = _ts_literal(batch_ts)
+    cid = f"CAST({int(client_id)} AS INT)"
+    ri = _q(ROW_IDX_COL)
+    active_mapped = "active" in mapped_cols
+    lco_mapped = "last_changed_on" in mapped_cols
+    nonempty = updates.filter("length(sku) > 0")
+    empty = updates.filter("length(sku) = 0")
     folded = fold_duplicate_skus(nonempty, mapped_cols)
 
-    t = current.alias("t")
-    u = folded.alias("u")
-    joined = t.join(u, F.col("t.sku") == F.col("u.sku"), "full_outer")
-
-    is_insert = F.col("t.sku").isNull()
-    is_unmatched = F.col("u.sku").isNull()  # current row absent from file
-
-    def merged_col(c: str) -> F.Column:
+    joined = current.alias("t").join(
+        folded.alias("u"), F.expr("t.sku = u.sku"), "full_outer"
+    )
+    # t.sku IS NULL: the file row is an insert; u.sku IS NULL: a current
+    # row the file does not mention
+    def merged_col(c: str) -> str:
         if c in mapped_cols:
-            return F.when(is_insert, F.col(f"u.{c}")).otherwise(
-                F.coalesce(F.col(f"u.{c}"), F.col(f"t.{c}"))
+            return (
+                f"CASE WHEN t.sku IS NULL THEN u.{_q(c)}"
+                f" ELSE coalesce(u.{_q(c)}, t.{_q(c)}) END"
             )
-        return F.col(f"t.{c}")
+        return f"t.{_q(c)}"
 
-    active_mapped = "active" in mapped_cols
     active_expr = (
-        F.when(
-            is_insert,
-            F.coalesce(F.col("u.active"), F.lit(True))
-            if active_mapped
-            else F.lit(True),
-        )
-        .otherwise(
-            F.coalesce(F.col("u.active"), F.col("t.active"))
-            if active_mapped
-            else F.col("t.active")
-        )
+        "CASE WHEN t.sku IS NULL THEN "
+        + ("coalesce(u.active, true)" if active_mapped else "true")
+        + " ELSE "
+        + ("coalesce(u.active, t.active)" if active_mapped else "t.active")
+        + " END"
     )
     if full_update:
-        active_expr = F.when(is_unmatched, F.lit(False)).otherwise(active_expr)
-
-    lco_mapped = "last_changed_on" in mapped_cols
+        active_expr = f"CASE WHEN u.sku IS NULL THEN false ELSE {active_expr} END"
     insert_lco = (
-        F.coalesce(F.col("u.last_changed_on").cast("timestamp_ntz"), ts)
+        f"coalesce(CAST(u.last_changed_on AS TIMESTAMP_NTZ), {ts})"
         if lco_mapped
         else ts
     )
-    untouched_lco = (
-        ts if full_update else F.col("t.last_changed_on")
-    )  # full_update touches deactivated rows
+    # full_update touches deactivated rows
+    untouched_lco = ts if full_update else "t.last_changed_on"
     lco_expr = (
-        F.when(is_insert, insert_lco)
-        .when(is_unmatched, untouched_lco)
-        .otherwise(ts)
+        f"CASE WHEN t.sku IS NULL THEN {insert_lco}"
+        f" WHEN u.sku IS NULL THEN {untouched_lco} ELSE {ts} END"
     )
-
-    merged = joined.select(
-        F.col("t.id").alias("id"),
-        F.lit(client_id).cast("int").alias("client_id"),
-        F.coalesce(F.col("t.sku"), F.col("u.sku")).alias("sku"),
-        *[merged_col(c).alias(c) for c in _DATA_COLS],
-        lco_expr.alias("last_changed_on"),
-        active_expr.alias("active"),
-        F.col(f"u.{ROW_IDX_COL}").alias("_insert_order"),
-    )
-
-    # Falsy-sku rows: each inserts unconditionally (no matching, no fold).
-    empty_sel = empty.select(
-        F.lit(None).cast("long").alias("id"),
-        F.lit(client_id).cast("int").alias("client_id"),
-        F.col("sku"),
-        *[
-            (F.col(c) if c in mapped_cols else F.lit(None)).alias(c)
-            for c in _DATA_COLS
-        ],
-        (
-            F.coalesce(F.col("last_changed_on").cast("timestamp_ntz"), ts)
-            if lco_mapped
-            else ts
-        ).alias("last_changed_on"),
-        (
-            F.coalesce(F.col("active"), F.lit(True))
-            if active_mapped
-            else F.lit(True)
-        ).alias("active"),
-        F.col(ROW_IDX_COL).alias("_insert_order"),
-    )
-    merged = merged.unionByName(empty_sel)
 
     # Surrogate ids for inserts: id_base + file row index + 1 — a pure
     # per-row expression, NO window. The reference only requires ids to be
-    # unique (it uses a DB sequence); _insert_order is the file's per-row
-    # index, unique within the file, so the ids are unique above id_base and
-    # monotone in file order. The previous Window.partitionBy(<boolean>)
-    # formulation funneled every inserted row of a bulk load through ONE
-    # task's sort; this assigns ids wherever the row already lives, zero
-    # shuffle. Ids may be sparse when the parser's row index is
+    # unique (it uses a DB sequence); the file's per-row index is unique
+    # within the file, so the ids are unique above id_base and monotone in
+    # file order. The previous Window.partitionBy(<boolean>) formulation
+    # funneled every inserted row of a bulk load through ONE task's sort;
+    # this assigns ids wherever the row already lives, zero shuffle. Ids
+    # may be sparse when the parser's row index is
     # monotonically_increasing_id (file readers put partition p's rows at
     # p·2^33+n); overwrite_partitions/overwrite_all therefore compute
     # max_id from the WRITTEN data — never from a row count — so sparseness
-    # only costs id-space, never uniqueness. (Dense ids, if ever required,
-    # are the standard zipWithIndex decomposition: per-partition counts +
-    # offsets.)
-    is_new = F.col("id").isNull()
-    merged = merged.withColumn(
-        "id",
-        F.when(
-            is_new, F.lit(id_base) + F.col("_insert_order") + 1
-        ).otherwise(F.col("id")),
-    ).drop("_insert_order")
-    return merged
+    # only costs id-space, never uniqueness. (The batch and streaming paths
+    # rewrite the index densely first — see dense_row_idx.)
+    merged = joined.selectExpr(
+        f"coalesce(t.id, {int(id_base)} + u.{ri} + 1) AS id",
+        f"{cid} AS client_id",
+        "coalesce(t.sku, u.sku) AS sku",
+        *[f"{merged_col(c)} AS {_q(c)}" for c in _DATA_COLS],
+        f"{lco_expr} AS last_changed_on",
+        f"{active_expr} AS active",
+    )
+
+    # Falsy-sku rows: each inserts unconditionally (no matching, no fold).
+    empty_sel = empty.selectExpr(
+        f"{int(id_base)} + {ri} + 1 AS id",
+        f"{cid} AS client_id",
+        "sku",
+        *[
+            f"{_q(c) if c in mapped_cols else 'NULL'} AS {_q(c)}"
+            for c in _DATA_COLS
+        ],
+        (
+            f"coalesce(CAST(last_changed_on AS TIMESTAMP_NTZ), {ts})"
+            if lco_mapped
+            else ts
+        )
+        + " AS last_changed_on",
+        ("coalesce(active, true)" if active_mapped else "true") + " AS active",
+    )
+    return merged.unionByName(empty_sel)
 
 
 def ingest_data(
@@ -375,13 +363,10 @@ def _ingest(
 
     # A row is "processed" iff ≥1 mapped source cell is present (non-null) —
     # the reference's `if not record_data: continue` (service.py:86-88).
-    if compiled.source_cols:
-        present = reduce(
-            lambda a, b: a | b,
-            [F.col(s).isNotNull() for s in compiled.source_cols],
-        )
-    else:
-        present = F.lit(False)
+    present = (
+        " OR ".join(f"{_q(s)} IS NOT NULL" for s in compiled.source_cols)
+        or "false"
+    )
     sku_mapped = "sku" in compiled.target_cols
 
     # Single scan of the source: typed projection + per-column invalid flags
@@ -404,15 +389,12 @@ def _ingest(
     # #6 — the separate dense_row_idx collect was a second full pass
     # over the cached staged relation, pure fixed overhead on every
     # ingest). Driver-side reduction is O(partitions).
-    per_rows = (
-        staged.groupBy(_mono_pid().alias("_pid"))
-        .agg(
-            F.max(_mono_low()).alias("_maxn"),
-            F.count(F.lit(1)).alias("_processed"),
-            F.sum(F.col("sku").isNull().cast("long")).alias("_null_sku"),
-            *[F.sum(F.col(b).cast("long")).alias(b) for b in bad_cols],
-        )
-        .collect()
+    per_rows = _per_partition(
+        staged,
+        _MAXN_AGG,
+        "count(1) AS _processed",
+        "sum(CAST(sku IS NULL AS BIGINT)) AS _null_sku",
+        *[f"sum(CAST({b} AS BIGINT)) AS {b}" for b in bad_cols],
     )
 
     def _tot(col: str) -> int:
@@ -549,7 +531,7 @@ def _ingest(
                 # (a racer may have added/retired skus between attempts).
                 # Do not hoist out of the loop.
                 keys = (
-                    updates.filter(F.length(F.col("sku")) > 0)
+                    updates.filter("length(sku) > 0")
                     .select("sku")
                     .distinct()
                     .cache()

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def fan_out(df: DataFrame) -> DataFrame:
@@ -39,9 +40,25 @@ def fan_out(df: DataFrame) -> DataFrame:
     own columns gets the same retry determinism for one cheap
     ``xxhash64`` per row, with full-domain keys so the spread stays
     uniform (guide §2.5's "derive the synthetic key deterministically"
-    rule)."""
+    rule). ``xxhash64`` rejects map (and variant) values, so only the
+    hashable columns feed the key; a relation with none left falls back
+    to the keyless ``repartition(n)``."""
     sc = df.sparkSession.sparkContext
     n = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n, F.xxhash64(*df.columns))
-    return df
+    if df.rdd.getNumPartitions() >= n:
+        return df
+    hashable = [f.name for f in df.schema.fields if _hashable(f.dataType)]
+    if not hashable:
+        return df.repartition(n)
+    return df.repartition(n, F.xxhash64(*hashable))
+
+
+def _hashable(dt: T.DataType) -> bool:
+    """Whether ``xxhash64`` accepts a value of type ``dt``."""
+    if isinstance(dt, (T.MapType, T.VariantType)):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return _hashable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_hashable(f.dataType) for f in dt.fields)
+    return True

@@ -2,10 +2,16 @@
 
 These exercise the engine surface the reference delegates to Postgres
 (SURVEY §2.2-§2.7) at analytic scale: multi-way joins, group-bys, windows,
-rollups, pivots, set ops, top-k. Money aggregates are computed as
-``sum(cast(x as decimal(18,2)))`` — exact, engine-portable arithmetic (no
-float-summation-order drift against the DuckDB oracle); ratios divide in
-double *after* the exact sums and round to a fixed scale.
+rollups, pivots, set ops, top-k. Money sums run on an int64 fixed-point
+path: each clean 2-decimal double becomes a LONG count of units
+(``_units``: ``floor(x*10^s + 0.5)``, cents for s=2), per-row products stay
+exact int64, the SUM accumulates into a wide decimal (``_usum``) and the
+one division back to value space happens per group (``_uval``). That is
+bit-identical to ``sum(cast(x as decimal(18,2)))`` without its per-row
+BigDecimal cost, and exact and engine-portable (no float-summation-order
+drift against the DuckDB oracle). A few orderings, window sums and
+filters still compare ``decimal(18,2)`` casts (``_money``); ratios divide
+in double *after* the exact sums and round to a fixed scale.
 
 Plan notes (verified via .explain):
 - dimension joins (region/nation/customer) broadcast under AQE;

@@ -67,3 +67,9 @@ TABLE_SCHEMAS = {
 ALL_TARGET_COLUMN_NAMES = [
     f.name for f in CLIENT_PRODUCTS_SCHEMA.fields if f.name != "id"
 ]
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backquoted SQL identifier (embedded backquotes
+    doubled), for plans built as SQL text."""
+    return "`" + name.replace("`", "``") + "`"

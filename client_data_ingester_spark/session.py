@@ -44,20 +44,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def pin_session_defaults(spark: SparkSession) -> SparkSession:
-    """Pin runtime confs we rely on, on a session we did not create.
-
-    The driver harness hands us its own SparkSession; timezone and AQE are
-    runtime-settable, so defensively pin them (oracle comparison assumes UTC).
-    """
-    for k, v in {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
-    }.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass
-    return spark

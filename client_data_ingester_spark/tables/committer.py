@@ -385,6 +385,3 @@ class PointerFileCommitter(Committer):
             os.path.join(staged, succ_rel), os.path.join(target, succ_rel)
         )
 
-
-def default_committer() -> Committer:
-    return PosixCommitter()

@@ -2763,3 +2763,26 @@ def test_shingle_novelty_copy_scores_zero_fresh_scores_one(spark):
     n, first, nov = out[4]
     assert n == 5 and first == 4
     assert nov == 0.8
+
+
+def test_fan_out_hashes_only_hashable_columns(spark):
+    """xxhash64 rejects map values: fan_out keys the spread on the other
+    columns, falls back to a keyless repartition when only maps are left,
+    and keeps the plain all-columns hash when every column is hashable."""
+    import io
+    from contextlib import redirect_stdout
+
+    from client_data_ingester_spark.operators.par import fan_out
+
+    n = spark.sparkContext.defaultParallelism
+    assert n > 1
+    df = spark.range(40).selectExpr("id", "map('k', id) AS m").coalesce(1)
+    for sub in (df, df.select("m")):
+        out = fan_out(sub)
+        assert out.rdd.getNumPartitions() == n
+        assert out.count() == 40
+    assert sorted(r.id for r in fan_out(df).collect()) == list(range(40))
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        fan_out(df.select("id")).explain()
+    assert "hashpartitioning(xxhash64(id" in buf.getvalue()

@@ -414,3 +414,60 @@ def test_default_mode_does_not_deactivate(app):
     assert by_sku["A"]["active"] is True
     assert by_sku["A"]["title"] == "Product A Updated"
     assert by_sku["B"]["active"] is True
+
+
+def test_auth_memo_dropped_by_every_auth_write(app, spark, tmp_path):
+    """current_user memoizes token → user per users/clients head version.
+    A memo hit runs no Spark job; a logout, a tenant deactivation and a
+    users write through another handle on the same root (another process)
+    each invalidate it, in this process, on the very next request."""
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+
+    def jobs_resolving(token):
+        group = f"auth-memo-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "auth memo probe")
+        try:
+            app.auth.current_user(spark, token)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def refused(token):
+        c = MiniClient(app)
+        c.cookies["session_token"] = token
+        return c.get("/products/list")[0] == 401
+
+    c1 = signed_in_client(app, SIGNUP_1)
+    token1 = c1.cookies["session_token"]
+    assert c1.get("/products/list")[0] == 200
+    assert jobs_resolving(token1) == 0  # served from the memo
+    assert c1.post_form("/auth/logout", {})[0] == 200
+    assert refused(token1)
+
+    c2 = signed_in_client(app, SIGNUP_2)
+    token2 = c2.cookies["session_token"]
+    assert c2.get("/products/list")[0] == 200
+    cid2 = app.auth.current_user(spark, token2)["client_id"]
+    clients = app.auth.clients
+    clients.overwrite_all(
+        clients.read(spark).withColumn(
+            "active", F.col("active") & (F.col("id") != cid2)
+        )
+    )
+    assert refused(token2)
+
+    c3 = signed_in_client(
+        app, SIGNUP_1 | {"email": "testuser3@example.com"}
+    )
+    token3 = c3.cookies["session_token"]
+    assert c3.get("/products/list")[0] == 200
+    assert jobs_resolving(token3) == 0
+    other = SnapshotTable(str(tmp_path / "users"), USERS_SCHEMA, partition_col="id")
+    other.overwrite_all(
+        other.read(spark).withColumn(
+            "session_token", F.lit(None).cast("string")
+        )
+    )
+    assert refused(token3)
