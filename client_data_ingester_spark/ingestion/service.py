@@ -30,6 +30,10 @@ Behavioral contracts replicated exactly (each has a test):
 - a processed row with NULL sku violates the NOT NULL constraint
   (001_up_init.sql:25) and aborts the whole file in the reference → here it
   fails validation before any write.
+
+The staging pass (:func:`stage_updates`) and the conflict-retry loop
+(:func:`commit_merge`) also carry the streaming ingest's micro-batches
+(streaming/ingest_stream.py): uploads and streams are one transaction.
 """
 
 from __future__ import annotations
@@ -37,15 +41,16 @@ from __future__ import annotations
 import datetime as _dt
 import random
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import CLIENT_PRODUCTS_SCHEMA, sql_ident as _q
 from ..tables.snapshot import SnapshotConflictError, SnapshotTable
-from .mapping import CompiledMapping, ParserConfig, compile_mapping
+from .mapping import ParserConfig, compile_mapping
 from .parsers import ROW_IDX_COL, Source, get_parser
 
 _DATA_COLS = [
@@ -104,8 +109,6 @@ _MONO_STRIDE = 1 << 33  # monotonically_increasing_id partition stride
 # position (lower bits) under monotonically_increasing_id
 _MONO_PID = f"shiftright({ROW_IDX_COL}, 33)"
 _MONO_LOW = f"({ROW_IDX_COL} & {_MONO_STRIDE - 1})"
-# the per-partition aggregate the dense row-index rewrite needs
-_MAXN_AGG = f"max({_MONO_LOW}) AS _maxn"
 
 
 def _ts_literal(ts: _dt.datetime) -> str:
@@ -114,23 +117,23 @@ def _ts_literal(ts: _dt.datetime) -> str:
     return f"TIMESTAMP_NTZ '{ts.isoformat(sep=' ')}'"
 
 
-def _per_partition(staged: DataFrame, *aggs: str) -> list:
-    """Collect the SQL aggregates ``aggs`` grouped by the row index's
-    source partition."""
-    return (
-        staged.groupBy(F.expr(f"{_MONO_PID} AS _pid"))
-        .agg(*[F.expr(a) for a in aggs])
-        .collect()
-    )
-
-
 def _apply_dense_idx(
     staged: DataFrame, per_rows: list
 ) -> "tuple[DataFrame, int]":
-    """Rewrite the sparse monotonic row index densely given the already-
-    collected per-partition ``(_pid, _maxn)`` rows (the shared aggregate
-    the validation job also rides — see ``_ingest``). Returns
-    ``(df, id_span)`` with every rewritten index in ``[0, id_span)``."""
+    """Map the parser's sparse ``monotonically_increasing_id`` row index
+    to a DENSE per-batch index, order-isomorphically (same fold winners,
+    same insert order), given the staging aggregate's per-partition
+    ``(_pid, _maxn)`` rows. Returns ``(df, id_span)`` with every
+    rewritten index in ``[0, id_span)``.
+
+    Why (r13 review): surrogate-id blocks are reserved as ``id_span``
+    ids. The raw monotonic index embeds the partition id in its upper
+    bits, so a 32-partition file would "span" ~31·2^33 indexes and burn
+    that much of the shared sequence. This is the zipWithIndex
+    decomposition: ``dense = offset[upper_bits] + lower_bits`` with
+    driver-side cumulative offsets. Post-parse filters may leave gaps in
+    the lower bits, so offsets use ``max(lower)+1`` — the span stays ≤
+    the batch's physical row count."""
     if not per_rows:
         return staged, 0
     offsets: dict[int, int] = {}
@@ -152,30 +155,6 @@ def _apply_dense_idx(
         ),
         acc,
     )
-
-
-def dense_row_idx(staged: DataFrame) -> "tuple[DataFrame, int]":
-    """Map the parser's sparse ``monotonically_increasing_id`` row index
-    to a DENSE per-batch index, order-isomorphically (same fold winners,
-    same insert order). Returns ``(df, id_span)`` where every rewritten
-    index is in ``[0, id_span)``.
-
-    Why (r13 review): surrogate-id blocks are reserved as
-    ``max(row_idx)+1`` ids. The raw monotonic index embeds the partition
-    id in its upper bits, so a 32-partition file "spans" ~31·2^33 ≈
-    2.7e11 indexes — every ingest (even a pure-update batch that mints
-    nothing) would burn that much id-space from the shared sequence.
-    The dense mapping is the standard zipWithIndex decomposition, done
-    as ONE small aggregate over the already-cached staged relation
-    (per-partition counts → driver-side cumulative offsets → broadcast
-    map): ``dense = offset[upper_bits] + lower_bits``. Lower bits are
-    consecutive per partition at the source; post-parse filters may
-    leave gaps, so offsets use ``max(lower)+1`` — the span stays ≤ the
-    file's physical row count. Driver state is O(partitions). The batch
-    service folds this aggregate INTO its validation job (one Spark
-    action serves both — see ``_ingest``); this standalone form is the
-    streaming path's entry point."""
-    return _apply_dense_idx(staged, _per_partition(staged, _MAXN_AGG))
 
 
 def fold_duplicate_skus(updates: DataFrame, mapped_cols: list[str]) -> DataFrame:
@@ -217,8 +196,9 @@ def merge_products(
 ) -> DataFrame:
     """Pure merge: current client snapshot ⟗ folded updates → new snapshot.
 
-    Shared by the batch service and the streaming foreachBatch path. One
-    shuffle (the full-outer join on sku); everything else is narrow.
+    Shared by the commit loop (uploads and streams alike) and the merge
+    queue's drain. One shuffle (the full-outer join on sku); everything
+    else is narrow.
 
     The projections are SQL text (``selectExpr``), not Column trees: a
     Column expression costs py4j round trips per node, and this plan is
@@ -279,8 +259,8 @@ def merge_products(
     # monotonically_increasing_id (file readers put partition p's rows at
     # p·2^33+n); overwrite_partitions/overwrite_all therefore compute
     # max_id from the WRITTEN data — never from a row count — so sparseness
-    # only costs id-space, never uniqueness. (The batch and streaming paths
-    # rewrite the index densely first — see dense_row_idx.)
+    # only costs id-space, never uniqueness. (The staging pass rewrites
+    # the index densely first — see stage_updates.)
     merged = joined.selectExpr(
         f"coalesce(t.id, {int(id_base)} + u.{ri} + 1) AS id",
         f"{cid} AS client_id",
@@ -308,6 +288,188 @@ def merge_products(
         ("coalesce(active, true)" if active_mapped else "true") + " AS active",
     )
     return merged.unionByName(empty_sel)
+
+
+@dataclass
+class StagedUpdates:
+    """One file or micro-batch after :func:`stage_updates`: the typed,
+    densely row-indexed update rows plus what the validation gate
+    found. ``reason`` is the abort reason (None when the batch may be
+    applied); reports and dead-letter rows quote it verbatim."""
+
+    updates: DataFrame
+    mapped_cols: list[str]
+    processed_count: int
+    id_span: int
+    reason: str | None
+    batch_ts: _dt.datetime = field(default_factory=_batch_timestamp)
+    id_base: int = 0
+
+    def reserve_ids(self, table: SnapshotTable) -> dict[str, Any]:
+        """Reserve this batch's surrogate-id block and return the commit
+        props that carry its top as the ledger's floor.
+
+        Every minted id is ``id_base + row_idx + 1`` and the dense index
+        keeps ``row_idx < id_span ≤ rows``, so the block is exclusive and
+        TIGHT: concurrent writers on other tenants never collide on ids
+        and never force a re-merge (their commit rebases). The block is
+        reserved once and reused across conflict retries — re-merging with
+        the same base is idempotent id-wise. A batch that can mint nothing
+        reserves nothing."""
+        if not self.id_span:
+            return {}
+        self.id_base = table.reserve_id_block(self.id_span)
+        return {"max_id": self.id_base + self.id_span}
+
+    def merge(
+        self, current: DataFrame, client_id: int, full_update: bool
+    ) -> DataFrame:
+        # merge_products is looked up as a module global on every call,
+        # so tests and tools can count merges by patching it
+        return merge_products(
+            current,
+            self.updates,
+            self.mapped_cols,
+            client_id,
+            full_update,
+            self.batch_ts,
+            self.id_base,
+        )
+
+
+@contextmanager
+def stage_updates(
+    raw: DataFrame, parser_config: ParserConfig
+) -> Iterator[StagedUpdates]:
+    """The staging pass shared by uploads and streams: ``raw`` (all-string
+    cells plus the parser's row index) → typed projection + per-column
+    invalid flags, cached, then ONE per-partition aggregate that yields
+    the processed count, the null-sku and invalid counts AND the max
+    in-partition position the dense row-index rewrite needs. The cached
+    relation is released when the block exits, on every path."""
+    compiled = compile_mapping(parser_config, raw)
+    # A row is "processed" iff ≥1 mapped source cell is present (non-null) —
+    # the reference's `if not record_data: continue` (service.py:86-88).
+    present = (
+        " OR ".join(f"{_q(s)} IS NOT NULL" for s in compiled.source_cols)
+        or "false"
+    )
+    sku_mapped = "sku" in compiled.target_cols
+    # invalid flags need the pre-transform source values, so they ride the
+    # same select and are dropped once the aggregate has counted them
+    bad_cols = [f"_bad_{i}" for i in range(len(compiled.invalid_flags))]
+    staged = raw.filter(present).select(
+        *compiled.projection,
+        *[flag.alias(b) for flag, b in zip(compiled.invalid_flags, bad_cols)],
+        ROW_IDX_COL,
+    )
+    if not sku_mapped:
+        staged = staged.withColumn("sku", F.lit(None).cast("string"))
+    staged = staged.cache()
+    try:
+        aggs = [
+            f"max({_MONO_LOW}) AS _maxn",
+            "count(1) AS _processed",
+            "sum(CAST(sku IS NULL AS BIGINT)) AS _null_sku",
+            *[f"sum(CAST({b} AS BIGINT)) AS {b}" for b in bad_cols],
+        ]
+        per_rows = (
+            staged.groupBy(F.expr(f"{_MONO_PID} AS _pid"))
+            .agg(*[F.expr(a) for a in aggs])
+            .collect()
+        )
+
+        def total(col: str) -> int:
+            return sum(int(r[col] or 0) for r in per_rows)
+
+        processed_count = total("_processed")
+        reason = None
+        for b, dst in zip(bad_cols, compiled.target_cols):
+            if n_bad := total(b):
+                reason = f"{n_bad} invalid value(s) in column {dst!r}"
+                break
+        if reason is None and processed_count and (
+            total("_null_sku") or not sku_mapped
+        ):
+            reason = 'null value in column "sku" violates not-null constraint'
+        updates, id_span = _apply_dense_idx(staged.drop(*bad_cols), per_rows)
+        yield StagedUpdates(
+            updates, compiled.distinct_targets, processed_count, id_span, reason
+        )
+    finally:
+        staged.unpersist()
+
+
+def commit_merge(
+    spark: SparkSession,
+    table: SnapshotTable,
+    client_id: int,
+    plan: Callable[[Any, DataFrame], "DataFrame | None"],
+    props: dict[str, Any],
+) -> "dict[str, int] | None":
+    """Publish ``plan(manifest, current)`` into ``client_id``'s partition
+    under optimistic concurrency — the one conflict-retry loop of product
+    ingest.
+
+    Each attempt reads the head manifest, reads the tenant's snapshot
+    PINNED to that version, and publishes the plan's merged frame with
+    the version as the expected state. A concurrent writer that lands
+    in between ON THIS PARTITION makes ``overwrite_partitions`` raise
+    instead of letting this publish drop the racer's rows; the loop
+    backs off, re-reads and re-plans. Writers on OTHER partitions never
+    conflict: the commit rebases its manifest delta onto the new head.
+    This is the parquet-world equivalent of the reference's Postgres
+    transaction serialization, minus its cross-tenant serialization.
+
+    ``plan`` returns None for "nothing to commit" (the loop then returns
+    None). Otherwise returns the conflict telemetry: empty for a
+    conflict-free commit, else the lost rounds and the worst run of
+    consecutive no-head-advance losses."""
+    losses = 0  # total lost rounds (absolute backstop)
+    stalled = 0  # consecutive losses with NO head advance (stuck signal)
+    stall_peak = 0
+    last_version = -1
+    while True:
+        if losses:
+            # jittered backoff AFTER a lost round, BEFORE re-reading the
+            # head: the losing herd spreads across the winner's commit
+            # window instead of all racing the same next head
+            _conflict_backoff(min(losses, 10))
+        manifest = table.current_doc()
+        current = table.read(spark, client_id, version=manifest.version or None)
+        merged = plan(manifest, current)
+        if merged is None:
+            return None
+        try:
+            table.overwrite_partitions(
+                merged,
+                [client_id],
+                props=props or None,
+                expected_version=manifest.version,
+            )
+            break
+        except SnapshotConflictError as e:
+            losses += 1
+            # progress-based liveness: a loss where the head moved means
+            # SOME writer won and left; a loss with the head parked (lock
+            # timeout, staged-dir reclaimed, rebase exhausted) is a stuck
+            # system, not contention
+            stalled = stalled + 1 if manifest.version == last_version else 0
+            stall_peak = max(stall_peak, stalled)
+            last_version = manifest.version
+            if stalled >= _MERGE_STALL_LIMIT:
+                raise SnapshotConflictError(
+                    f"merge lost {stalled} consecutive rounds with no "
+                    f"head advance (stuck at v{last_version}): {e}"
+                ) from e
+            if losses >= _MERGE_MAX_ATTEMPTS:
+                raise SnapshotConflictError(
+                    f"merge lost {losses} rounds to a continuous "
+                    f"writer stream; giving up (absolute backstop): {e}"
+                ) from e
+    if not losses:
+        return {}
+    return {"merge_conflict_rounds": losses, "merge_stall_peak": stall_peak}
 
 
 def ingest_data(
@@ -357,271 +519,85 @@ def _ingest(
     group_commit: bool = False,
 ) -> IngestionReport:
     error_type = "full update" if full_update else "data"
-    parser = get_parser(parser_config.parser_id)
-    raw = parser(spark, source)
-    compiled: CompiledMapping = compile_mapping(parser_config, raw)
-
-    # A row is "processed" iff ≥1 mapped source cell is present (non-null) —
-    # the reference's `if not record_data: continue` (service.py:86-88).
-    present = (
-        " OR ".join(f"{_q(s)} IS NOT NULL" for s in compiled.source_cols)
-        or "false"
-    )
-    sku_mapped = "sku" in compiled.target_cols
-
-    # Single scan of the source: typed projection + per-column invalid flags
-    # (invalid flags need the pre-transform source values, so they are
-    # computed in the same select and dropped after the validation agg).
-    bad_cols = [f"_bad_{i}" for i in range(len(compiled.invalid_flags))]
-    staged = raw.filter(present).select(
-        *compiled.projection,
-        *[flag.alias(b) for flag, b in zip(compiled.invalid_flags, bad_cols)],
-        ROW_IDX_COL,
-    )
-    if not sku_mapped:
-        staged = staged.withColumn("sku", F.lit(None).cast("string"))
-    staged = staged.cache()
-
-    # --- validation job (the "permissive parse, strict apply" gate, F5) ----
-    # ONE Spark action serves both control decisions: the per-partition
-    # groupBy carries the invalid/null-sku/processed counters AND the
-    # max-low-bits the dense row-index rewrite needs (r15 verdict ask
-    # #6 — the separate dense_row_idx collect was a second full pass
-    # over the cached staged relation, pure fixed overhead on every
-    # ingest). Driver-side reduction is O(partitions).
-    per_rows = _per_partition(
-        staged,
-        _MAXN_AGG,
-        "count(1) AS _processed",
-        "sum(CAST(sku IS NULL AS BIGINT)) AS _null_sku",
-        *[f"sum(CAST({b} AS BIGINT)) AS {b}" for b in bad_cols],
-    )
-
-    def _tot(col: str) -> int:
-        return sum(int(r[col] or 0) for r in per_rows)
-
-    stats_row = {"_null_sku": _tot("_null_sku")} | {
-        b: _tot(b) for b in bad_cols
-    }
-    processed_count = _tot("_processed")
-    for b, dst in zip(bad_cols, compiled.target_cols):
-        n_bad = stats_row[b] or 0
-        if n_bad:
-            staged.unpersist()
+    raw = get_parser(parser_config.parser_id)(spark, source)
+    with stage_updates(raw, parser_config) as st:
+        # the "permissive parse, strict apply" gate (F5)
+        if st.reason is not None:
             return IngestionReport(
                 success=False,
-                message=(
-                    f"Error processing {error_type}: {n_bad} invalid value(s) "
-                    f"in column {dst!r}"
-                ),
+                message=f"Error processing {error_type}: {st.reason}",
                 processed_items=0,
             )
-    if processed_count and (stats_row["_null_sku"] or not sku_mapped):
-        staged.unpersist()
-        return IngestionReport(
-            success=False,
-            message=(
-                f"Error processing {error_type}: null value in column \"sku\" "
-                f"violates not-null constraint"
-            ),
-            processed_items=0,
-        )
-    updates = staged.drop(*bad_cols)
+        stats: dict[str, Any] = {"processed_count": st.processed_count}
+        if st.processed_count == 0 and not full_update:
+            return IngestionReport(
+                success=True, message="Success", processed_items=0, stats=stats
+            )
+        props = st.reserve_ids(table)
 
-    if processed_count == 0 and not full_update:
-        staged.unpersist()
-        msg = "Success"
-        return IngestionReport(
-            success=True,
-            message=msg,
-            processed_items=0,
-            stats={"processed_count": 0},
-        )
+        if group_commit:
+            # fleet path: stage the validated fold as a queue ticket; one
+            # writer drains a whole batch in a single commit. Ids are from
+            # THIS writer's reserved block, so apply order never matters.
+            from ..tables import mergequeue
 
-    batch_ts = _batch_timestamp()
-    deactivated_count = 0
-    ingested_sku_count = 0
-    # Surrogate-id block reservation (the concurrent-writer path): every
-    # minted id is id_base + row_idx + 1, and after the dense rewrite
-    # row_idx < id_span ≤ file rows, so reserving id_span ids up front
-    # gives this ingest an exclusive, TIGHT block — two tenants ingesting
-    # concurrently can no longer collide on ids, and the publish no
-    # longer needs the expected_max_id guard that forced a FULL MERGE
-    # RECOMPUTE whenever any other tenant advanced the ledger. One tiny
-    # agg over the already-cached staged relation; the block is reserved
-    # once and reused across conflict retries (same writer, same ids —
-    # re-merging with the same base is idempotent id-wise). The dense
-    # rewrite reuses the validation job's per-partition rows: no second
-    # action.
-    updates, id_span = _apply_dense_idx(updates, per_rows)
-    if id_span == 0:
-        id_base = 0  # no rows can insert; the base is never used
-        reserved_top = None
-    else:
-        id_base = table.reserve_id_block(id_span)
-        reserved_top = id_base + id_span
-
-    if group_commit:
-        # fleet path: stage the validated fold as a queue ticket; one
-        # writer drains a whole batch in a single commit. Ids are from
-        # THIS writer's reserved block, so apply order never matters.
-        from ..tables import mergequeue
-
-        try:
             ticket = mergequeue.enqueue(
                 table,
-                updates,
+                st.updates,
                 client_id=client_id,
-                mapped_cols=compiled.distinct_targets,
-                batch_ts=batch_ts.isoformat(),
-                id_base=id_base,
-                id_span=id_span,
-                processed_count=processed_count,
+                mapped_cols=st.mapped_cols,
+                batch_ts=st.batch_ts.isoformat(),
+                id_base=st.id_base,
+                id_span=st.id_span,
+                processed_count=st.processed_count,
             )
             res = mergequeue.drain_or_wait(spark, table, ticket)
-        finally:
-            staged.unpersist()
-        return IngestionReport(
-            success=True,
-            message="Success",
-            processed_items=processed_count,
-            stats={
-                "processed_count": processed_count,
-                "group_commit_batch": res["group_commit_batch"],
-                "group_commit_drainer": res["group_commit_drainer"],
-            },
-        )
-
-    # Optimistic-concurrency loop: the merge is computed against a snapshot
-    # PINNED to the manifest version read here, and the publish passes that
-    # version as the expected state. A concurrent writer that lands in
-    # between ON THIS PARTITION makes overwrite_partitions raise instead of
-    # letting this publish silently drop the racer's rows — we then re-read
-    # the new snapshot and re-merge. Writers on OTHER partitions no longer
-    # conflict at all: ids come from the reserved block and the commit
-    # rebases its manifest delta onto the new head (tables/snapshot.py).
-    # This is the parquet-world equivalent of the reference's Postgres
-    # transaction serialization, minus its cross-tenant serialization.
-    last_conflict: SnapshotConflictError | None = None
-    # try/finally so ANY exit — success, conflict exhaustion, or an
-    # unexpected error from merge/overwrite — releases the cached staged
-    # DataFrame exactly once (a leak here pins executor storage memory for
-    # the rest of the session).
-    losses = 0  # total lost rounds (absolute backstop)
-    stalled = 0  # consecutive losses with NO head advance (stuck signal)
-    stall_peak = 0  # worst consecutive-stall run seen (telemetry)
-    last_version = -1
-    try:
-        while True:
-            if losses:
-                # jittered backoff AFTER a lost round, BEFORE re-reading
-                # the head: desynchronizes the losing herd so re-merges
-                # spread across the winner's commit window instead of
-                # all racing the same next head (r13 verdict ask #4)
-                _conflict_backoff(min(losses, 10))
-            manifest = table.current_doc()
-            current = table.read(
-                spark,
-                client_id,
-                version=manifest.version if manifest.version else None,
+            stats["group_commit_batch"] = res["group_commit_batch"]
+            stats["group_commit_drainer"] = res["group_commit_drainer"]
+            return IngestionReport(
+                success=True,
+                message="Success",
+                processed_items=st.processed_count,
+                stats=stats,
             )
+
+        counts: dict[str, int] = {}
+
+        def plan(_manifest, current: DataFrame) -> DataFrame:
             if full_update:
-                # INTENTIONALLY recomputed on every retry: the counts must
-                # describe the snapshot version this attempt merges against
-                # (a racer may have added/retired skus between attempts).
-                # Do not hoist out of the loop.
+                # INTENTIONALLY recomputed on every attempt: the counts
+                # must describe the snapshot version this attempt merges
+                # against (a racer may have added/retired skus between
+                # attempts). Do not hoist out of the plan.
                 keys = (
-                    updates.filter("length(sku) > 0")
+                    st.updates.filter("length(sku) > 0")
                     .select("sku")
                     .distinct()
                     .cache()
                 )
-                ingested_sku_count = keys.count()
-                deactivated_count = current.join(
+                n_skus = keys.count()
+                counts["deactivated_count"] = current.join(
                     keys, "sku", "left_anti"
                 ).count()
+                counts["total_ingested_skus"] = n_skus
                 keys.unpersist()
-            merged = merge_products(
-                current,
-                updates,
-                compiled.distinct_targets,
-                client_id,
-                full_update,
-                batch_ts,
-                id_base,
-            )
-            try:
-                # props carries the reserved block's top as a FLOOR (every
-                # minted id is ≤ it by construction); overwrite_partitions
-                # still raises it to max(id) of the written data and the
-                # head's own max_id, so the ledger never falls below a
-                # live id even across out-of-order concurrent commits
-                table.overwrite_partitions(
-                    merged,
-                    [client_id],
-                    props=(
-                        {"max_id": reserved_top}
-                        if reserved_top is not None
-                        else None
-                    ),
-                    expected_version=manifest.version,
-                )
-                break
-            except SnapshotConflictError as e:
-                last_conflict = e
-                losses += 1
-                # progress-based liveness: a loss where the head moved
-                # means SOME writer won and left — retry costs nothing
-                # toward the stall budget; a loss with the head parked
-                # (lock timeout, staged-dir reclaimed, rebase exhausted)
-                # is a stuck system, not contention
-                stalled = (
-                    stalled + 1 if manifest.version == last_version else 0
-                )
-                stall_peak = max(stall_peak, stalled)
-                last_version = manifest.version
-                if stalled >= _MERGE_STALL_LIMIT:
-                    raise SnapshotConflictError(
-                        f"merge lost {stalled} consecutive rounds with no "
-                        f"head advance (stuck at v{last_version}): "
-                        f"{last_conflict}"
-                    ) from last_conflict
-                if losses >= _MERGE_MAX_ATTEMPTS:
-                    raise SnapshotConflictError(
-                        f"merge lost {losses} rounds to a continuous "
-                        "writer stream; giving up (absolute backstop): "
-                        f"{last_conflict}"
-                    ) from last_conflict
-                continue
-    finally:
-        staged.unpersist()
+            return st.merge(current, client_id, full_update)
 
-    stats: dict[str, Any] = {"processed_count": processed_count}
-    if losses:
-        # telemetry for the optimistic-concurrency path: how many rounds
-        # this merge lost before winning. Only present when a conflict
-        # actually happened (conflict-free ingests keep the legacy stats
-        # shape); the scored entry ingest_conflict_merge asserts on it so
-        # the retry/rebase branch is exercised under the oracle gate,
-        # not just unit tests
-        stats["merge_conflict_rounds"] = losses
-        # worst consecutive no-head-advance run survived (0 under pure
-        # contention — every loss had a winner; >0 means lock timeouts /
-        # swept staging were absorbed). The cross-process contention
-        # bench (tools/bench_xproc_tenant.py) records both numbers.
-        stats["merge_stall_peak"] = stall_peak
+        # conflict telemetry (merge_conflict_rounds, merge_stall_peak) is
+        # only present when a conflict actually happened; the scored entry
+        # ingest_conflict_merge and tools/bench_xproc_tenant.py read it
+        stats |= commit_merge(spark, table, client_id, plan, props)
+
+    message = "Success"
     if full_update:
-        stats["deactivated_count"] = deactivated_count
-        stats["total_ingested_skus"] = ingested_sku_count
+        stats |= counts
         message = (
-            f"Full update completed. {processed_count} products processed, "
-            f"{deactivated_count} products deactivated."
+            f"Full update completed. {st.processed_count} products processed, "
+            f"{counts['deactivated_count']} products deactivated."
         )
-    else:
-        message = "Success"
     return IngestionReport(
         success=True,
         message=message,
-        processed_items=processed_count,
+        processed_items=st.processed_count,
         stats=stats,
     )

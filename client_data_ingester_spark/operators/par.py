@@ -42,7 +42,12 @@ def fan_out(df: DataFrame) -> DataFrame:
     uniform (guide §2.5's "derive the synthetic key deterministically"
     rule). ``xxhash64`` rejects map (and variant) values, so only the
     hashable columns feed the key; a relation with none left falls back
-    to the keyless ``repartition(n)``."""
+    to the keyless ``repartition(n)``.
+
+    Caveat: rows with identical content hash to ONE partition, so a
+    narrow projection dominated by duplicate rows stays as narrow as its
+    distinct-row count — unlike round-robin, the fan-out widens by
+    distinct content, not by row count."""
     sc = df.sparkSession.sparkContext
     n = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= n:

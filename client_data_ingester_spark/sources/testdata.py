@@ -53,8 +53,8 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 #: or computed values are ever stored: every action on the returned
 #: DataFrame plans and scans the parquet files from scratch. Same
 #: immutable-inputs-per-session assumption as Spark's own
-#: filesourcePartitionFileCacheSize. Keyed by applicationId so a new
-#: session never sees a stale handle.
+#: filesourcePartitionFileCacheSize. Keyed by applicationId; handles of
+#: any other application are evicted on the next load.
 _HANDLE_CACHE: "dict[tuple[str, str, str], DataFrame]" = {}
 
 
@@ -65,12 +65,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     encoding degrades to a readable BIGINT instead of an unreadable-type
     error; :func:`normalize_event_ts` then branches on what actually loaded.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    # pinned on every call, cache hit or not: a cached handle's timestamp
+    # expressions run in whatever zone the session has when it executes
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    app_id = spark.sparkContext.applicationId
+    for k in list(_HANDLE_CACHE):
+        if k[0] != app_id:
+            _HANDLE_CACHE.pop(k, None)
+    key = (app_id, sf_dir, name)
     cached = _HANDLE_CACHE.get(key)
     if cached is not None:
         return cached
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_event_ts(df)

@@ -1,24 +1,24 @@
 """Streaming ingestion (SURVEY §2.9 / §7 Phase 4).
 
 The reference's ingest is request-scoped batch (one uploaded file per call).
-Here the same pipeline is also exposed as Structured Streaming over a landing
-directory: ``readStream`` (CSV/JSON file source) → ``foreachBatch`` invoking
-the *same* merge used by the batch path, so batch and stream share one code
-path — including the batch path's whole-file validation contract:
+Here the same transaction is also exposed as Structured Streaming over a
+landing directory: ``readStream`` (CSV/JSON file source) → ``foreachBatch``
+running the batch path's own staging pass and commit loop
+(``ingestion.service.stage_updates`` / ``commit_merge``), so a micro-batch
+gets exactly the batch contract — validate-then-abort, the dense id block,
+optimistic-concurrency retry. This module adds only what a stream needs:
 
-- the micro-batch runs the same invalid-cell gate as ``ingest_data``
-  (B/ingestion/service.py:56-64 semantics): any garbage decimal/boolean cell
-  or a null sku aborts the WHOLE micro-batch with zero rows changed; the raw
-  batch goes to the dead-letter directory (if configured) with the abort
-  reason, instead of silently merging nulls;
-- exactly-once across crash/replay is transactional, not aspirational: the
-  last applied epoch id is committed in the snapshot manifest's props
-  atomically with the data publish, and a replayed micro-batch whose epoch is
-  already recorded is a no-op. This covers the otherwise non-idempotent
-  empty-sku always-insert rows, not just the keyed upserts. (Dead-letter
-  writes sit outside that transaction — an error batch replayed after a
-  crash can be dead-lettered twice; the TABLE is exactly-once, the error
-  channel is at-least-once.)
+- a row index: ``monotonically_increasing_id`` over the micro-batch;
+- a dead-letter sink: a micro-batch the validation gate rejects changes
+  zero rows and its raw rows land in ``dead_letter_dir`` (if configured)
+  with the same reason text an upload's failure report carries;
+- an epoch replay guard: the last applied epoch id is committed in the
+  snapshot manifest's props atomically with the data publish, and a
+  replayed micro-batch whose epoch is already recorded is a no-op. This
+  covers the otherwise non-idempotent empty-sku always-insert rows, not
+  just the keyed upserts. (Dead-letter writes sit outside that
+  transaction — an error batch replayed after a crash can be dead-lettered
+  twice; the TABLE is exactly-once, the error channel is at-least-once.)
 
 Event-time windowed aggregation over the ``events`` table (watermarks, late
 data) lives in operators/events.py; this module is the ingest stream.
@@ -26,26 +26,18 @@ data) lives in operators/events.py; this module is the ingest stream.
 
 from __future__ import annotations
 
-import datetime as _dt
 import logging
 import os
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..ingestion.mapping import ParserConfig, compile_mapping
+from ..ingestion.mapping import ParserConfig
 from ..ingestion.parsers import ROW_IDX_COL
-from ..ingestion.service import (
-    _MERGE_MAX_ATTEMPTS,
-    _MERGE_STALL_LIMIT,
-    _conflict_backoff,
-    dense_row_idx,
-    merge_products,
-)
-from ..tables.snapshot import SnapshotConflictError, SnapshotTable
+from ..ingestion.service import commit_merge, stage_updates
+from ..tables.snapshot import SnapshotTable
 
 _log = logging.getLogger(__name__)
 
@@ -113,161 +105,37 @@ def start_ingest_stream(
             .parquet(dead_letter_dir)
         )
 
+    def replayed(epoch_id: int, manifest) -> bool:
+        return int(epoch_id) <= int(manifest.props.get(txn_key, -1))
+
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
+        if batch_df.isEmpty() or replayed(epoch_id, table.current_doc()):
             return
-        # replay guard: epoch committed atomically with the publish below
-        manifest = table.current_doc()
-        if int(epoch_id) <= int(manifest.props.get(txn_key, -1)):
-            return
-        # row order within the micro-batch (monotonically_increasing_id is
-        # legal here — batch_df is a plain DataFrame inside foreachBatch)
-        batch_df = batch_df.withColumn(
-            ROW_IDX_COL, F.monotonically_increasing_id()
-        )
-        compiled = compile_mapping(parser_config, batch_df)
-
-        # same "processed row" gate as the batch path: ≥1 mapped cell present
-        if compiled.source_cols:
-            present = reduce(
-                lambda a, b: a | b,
-                [F.col(s).isNotNull() for s in compiled.source_cols],
-            )
-        else:
-            present = F.lit(False)
-        sku_mapped = "sku" in compiled.target_cols
-        bad_cols = [f"_bad_{i}" for i in range(len(compiled.invalid_flags))]
-        staged = batch_df.filter(present).select(
-            *compiled.projection,
-            *[flag.alias(b) for flag, b in zip(compiled.invalid_flags, bad_cols)],
-            ROW_IDX_COL,
-        )
-        if not sku_mapped:
-            staged = staged.withColumn("sku", F.lit(None).cast("string"))
-        staged = staged.cache()
-        try:
-            stats_row = staged.agg(
-                F.count(F.lit(1)).alias("_processed"),
-                F.sum(F.col("sku").isNull().cast("long")).alias("_null_sku"),
-                *[F.sum(F.col(b).cast("long")).alias(b) for b in bad_cols],
-            ).first()
-            processed_count = stats_row["_processed"]
-            reason = None
-            for b, dst in zip(bad_cols, compiled.target_cols):
-                if stats_row[b]:
-                    reason = (
-                        f"{stats_row[b]} invalid value(s) in column {dst!r}"
-                    )
-                    break
-            if reason is None and processed_count and (
-                stats_row["_null_sku"] or not sku_mapped
-            ):
-                reason = (
-                    'null value in column "sku" violates not-null constraint'
-                )
-            if reason is not None:
-                dead_letter(batch_df.drop(ROW_IDX_COL), epoch_id, reason)
-                return  # whole-batch abort: zero rows changed, batch parity
-            if processed_count == 0 and not full_update:
+        # monotonically_increasing_id is legal here: batch_df is a plain
+        # DataFrame inside foreachBatch
+        raw = batch_df.withColumn(ROW_IDX_COL, F.monotonically_increasing_id())
+        with stage_updates(raw, parser_config) as st:
+            if st.reason is not None:
+                dead_letter(batch_df, epoch_id, st.reason)
                 return
+            if st.processed_count == 0 and not full_update:
+                return
+            # an epoch replayed after a crash reserves a fresh block:
+            # burned ids, never duplicate ones
+            props = st.reserve_ids(table) | {txn_key: int(epoch_id)}
 
-            updates = staged.drop(*bad_cols)
-            batch_ts = _dt.datetime.now(_dt.timezone.utc).replace(
-                tzinfo=None, microsecond=0
-            )
-            # id-block reservation, as in the batch path (service.py):
-            # the epoch's inserts mint from an exclusively-reserved TIGHT
-            # block (dense row indexes — id-space cost is epoch rows, not
-            # partitions·2^33), so writers on OTHER partitions never
-            # force a re-merge (the commit rebases its manifest delta
-            # onto the new head) and can never collide on ids. An epoch
-            # REPLAY after a crash reserves a fresh block — burned ids,
-            # never duplicate ones (the txn_key guard above skips epochs
-            # that already committed).
-            updates, id_span = dense_row_idx(updates)
-            if id_span == 0:
-                id_base, reserved_top = 0, None
-            else:
-                id_base = table.reserve_id_block(id_span)
-                reserved_top = id_base + id_span
-            # same optimistic-concurrency loop as the batch path
-            # (service.py): the merge is derived from a snapshot read, so
-            # a concurrent writer ON THIS PARTITION (batch ingest, another
-            # stream on a different txn_key) landing in between must force
-            # a re-read and re-merge — an unguarded publish would drop the
-            # racer's rows
-            last_conflict: Exception | None = None
-            losses = 0
-            stalled = 0
-            last_version = -1
-            while True:
-                if losses:
-                    # same contention policy as the batch path: jitter
-                    # the losing herd; progress-based retry (see
-                    # service.py — a loss where the head advanced burns
-                    # no stall budget, so liveness holds for any finite
-                    # writer count)
-                    _conflict_backoff(min(losses, 10))
-                manifest = table.current_doc()
-                # re-check the replay guard EVERY attempt, not just at
-                # entry: a crash between the commit point and the
-                # pointer publish leaves this epoch committed behind a
-                # stale pointer — the replay's first attempt then
-                # collides, the collision self-heals the pointer, and
-                # without this re-check the retry would re-merge
-                # against the healed head (which already contains this
-                # epoch) and apply it TWICE (duplicated always-insert
-                # rows with fresh ids). Found by the r13 review.
-                if int(epoch_id) <= int(manifest.props.get(txn_key, -1)):
-                    return
-                # pin the read to the version the conflict guard
-                # compares against (the batch path's convention): an
-                # unpinned read could see a commit newer than
-                # expected_version and spend a wasted conflict retry
-                current = table.read(
-                    spark,
-                    client_id,
-                    version=manifest.version if manifest.version else None,
-                )
-                merged = merge_products(
-                    current,
-                    updates,
-                    compiled.distinct_targets,
-                    client_id,
-                    full_update,
-                    batch_ts,
-                    id_base,
-                )
-                try:
-                    props = {txn_key: int(epoch_id)}
-                    if reserved_top is not None:
-                        # the block top is a floor; overwrite_partitions
-                        # keeps the ledger monotone vs head and data
-                        props["max_id"] = reserved_top
-                    table.overwrite_partitions(
-                        merged,
-                        [client_id],
-                        props=props,
-                        expected_version=manifest.version,
-                    )
-                    break
-                except SnapshotConflictError as e:
-                    last_conflict = e
-                    losses += 1
-                    stalled = (
-                        stalled + 1
-                        if manifest.version == last_version
-                        else 0
-                    )
-                    last_version = manifest.version
-                    if (
-                        stalled >= _MERGE_STALL_LIMIT
-                        or losses >= _MERGE_MAX_ATTEMPTS
-                    ):
-                        raise last_conflict
-                    continue
-        finally:
-            staged.unpersist()
+            def plan(manifest, current: DataFrame) -> DataFrame | None:
+                # the replay guard is re-checked on EVERY attempt (r13): a
+                # crash between the commit point and the pointer publish
+                # leaves this epoch committed behind a stale pointer; the
+                # replay's first attempt collides and heals the pointer,
+                # and re-merging against the healed head would apply the
+                # epoch twice
+                if replayed(epoch_id, manifest):
+                    return None
+                return st.merge(current, client_id, full_update)
+
+            commit_merge(spark, table, client_id, plan, props)
 
     return (
         stream.writeStream.foreachBatch(merge_batch)

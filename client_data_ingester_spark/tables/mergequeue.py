@@ -244,6 +244,7 @@ def drain_batch(spark: SparkSession, table) -> list[str]:
     # the drainer's own OCC loop against OUTSIDE (direct-path) writers;
     # queue-internal writers are all in this batch, so contention here
     # is rare — bounded like the direct path's stall budget
+    # own loop, not commit_merge: its backoff could outlive DRAIN_LOCK_TTL_S
     last_err: SnapshotConflictError | None = None
     for _attempt in range(8):
         manifest = table.current_doc()

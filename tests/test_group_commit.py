@@ -69,31 +69,22 @@ def _enqueue_raw(spark, table, rows, client_id=1):
     dense row index and a reserved id block), without draining."""
     import datetime as _dt
 
-    from pyspark.sql import functions as F
-
-    from client_data_ingester_spark.ingestion.mapping import compile_mapping
-    from client_data_ingester_spark.ingestion.parsers import (
-        ROW_IDX_COL,
-        get_parser,
-    )
-    from client_data_ingester_spark.ingestion.service import dense_row_idx
+    from client_data_ingester_spark.ingestion.parsers import get_parser
+    from client_data_ingester_spark.ingestion.service import stage_updates
 
     raw = get_parser("csv")(spark, make_csv(rows))
-    compiled = compile_mapping(CFG, raw)
-    staged = raw.select(*compiled.projection, ROW_IDX_COL)
-    updates, id_span = dense_row_idx(staged)
-    id_base = table.reserve_id_block(id_span)
-    n = staged.count()
-    return mergequeue.enqueue(
-        table,
-        updates,
-        client_id=client_id,
-        mapped_cols=compiled.distinct_targets,
-        batch_ts=_dt.datetime(2024, 6, 1, 12, 0, 0).isoformat(),
-        id_base=id_base,
-        id_span=id_span,
-        processed_count=n,
-    )
+    with stage_updates(raw, CFG) as st:
+        st.reserve_ids(table)
+        return mergequeue.enqueue(
+            table,
+            st.updates,
+            client_id=client_id,
+            mapped_cols=st.mapped_cols,
+            batch_ts=_dt.datetime(2024, 6, 1, 12, 0, 0).isoformat(),
+            id_base=st.id_base,
+            id_span=st.id_span,
+            processed_count=st.processed_count,
+        )
 
 
 def test_drain_batch_applies_all_tickets_in_one_commit(spark, tmp_path):

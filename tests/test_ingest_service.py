@@ -614,20 +614,23 @@ def test_duplicate_target_full_ingest_last_column_wins(spark, products_table):
 def test_dense_row_idx_order_isomorphic_and_tight(spark):
     """r13 review: id blocks are sized by max(row_idx)+1, so the sparse
     monotonically_increasing_id index (partition id in the upper bits)
-    burned ~partitions·2^33 ids per ingest. dense_row_idx must rewrite
+    burned ~partitions·2^33 ids per ingest. The staging pass must rewrite
     it to a tight per-batch index that preserves ORDER exactly (fold
     winners and insert order are order-functions of the index)."""
+    from client_data_ingester_spark.ingestion.mapping import ParserConfig
     from client_data_ingester_spark.ingestion.parsers import ROW_IDX_COL
-    from client_data_ingester_spark.ingestion.service import dense_row_idx
+    from client_data_ingester_spark.ingestion.service import stage_updates
 
+    cfg = ParserConfig("csv", {"sku": ("sku", "text")})
     stride = 1 << 33
     sparse = [0, 1, stride, stride + 1, 3 * stride + 5]  # gaps included
     df = spark.createDataFrame(
         [(f"r{i}", idx) for i, idx in enumerate(sparse)],
         f"sku string, {ROW_IDX_COL} long",
     )
-    out, span = dense_row_idx(df)
-    rows = {r["sku"]: r[ROW_IDX_COL] for r in out.collect()}
+    with stage_updates(df, cfg) as st:
+        span = st.id_span
+        rows = {r["sku"]: r[ROW_IDX_COL] for r in st.updates.collect()}
     # tight: span ≤ Σ (max_lower+1) per partition = 2 + 2 + 6 = 10
     assert span == 10
     assert all(0 <= v < span for v in rows.values())
@@ -640,11 +643,11 @@ def test_dense_row_idx_order_isomorphic_and_tight(spark):
     dense_in = spark.createDataFrame(
         [(f"d{i}", i) for i in range(4)], f"sku string, {ROW_IDX_COL} long"
     )
-    out2, span2 = dense_row_idx(dense_in)
-    assert span2 == 4
-    assert {r["sku"]: r[ROW_IDX_COL] for r in out2.collect()} == {
-        f"d{i}": i for i in range(4)
-    }
+    with stage_updates(dense_in, cfg) as st2:
+        assert st2.id_span == 4
+        assert {r["sku"]: r[ROW_IDX_COL] for r in st2.updates.collect()} == {
+            f"d{i}": i for i in range(4)
+        }
 
 
 def test_ingest_id_space_consumption_is_row_bounded(spark, tmp_path):

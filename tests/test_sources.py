@@ -76,3 +76,27 @@ def test_normalize_rejects_unsupported_dtype(spark):
     df = spark.range(1).selectExpr("CAST('x' AS STRING) AS ts")
     with pytest.raises(TypeError, match="unsupported dtype"):
         normalize_event_ts(df)
+
+
+def test_load_table_repins_utc_and_evicts_stale_sessions(spark, tmp_path):
+    """A cache hit still re-pins the session time zone to UTC (the cached
+    handle's timestamp expressions are evaluated in the session zone at
+    execution time), and handles cached under another applicationId are
+    evicted on the next load."""
+    from client_data_ingester_spark.sources import testdata
+
+    _write(str(tmp_path), "us")
+    sf_dir = str(tmp_path)
+    expected = sorted((r[0], r[3]) for r in ROWS)
+    assert _collect(spark, sf_dir) == expected  # fills the handle cache
+    key = (spark.sparkContext.applicationId, sf_dir, "events")
+    stale = ("stale-application-id", sf_dir, "events")
+    testdata._HANDLE_CACHE[stale] = testdata._HANDLE_CACHE[key]
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        assert _collect(spark, sf_dir) == expected  # cache hit
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    assert key in testdata._HANDLE_CACHE
+    assert stale not in testdata._HANDLE_CACHE

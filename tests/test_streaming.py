@@ -277,3 +277,135 @@ def test_stream_merge_retries_on_publish_conflict(
     assert calls["n"] == 2  # one conflict, one committed retry
     got = {r["sku"] for r in products_table.read(spark, 1).collect()}
     assert got == {"S1"}
+
+
+def test_stream_micro_batch_fixed_cost_spark_jobs(
+    spark, products_table, tmp_path
+):
+    """A conflict-free 200-row micro-batch onto an existing tenant runs the
+    batch path's single staging aggregate — no separate validation job,
+    no standalone dense-index collect — so its run group holds at most
+    7 Spark jobs (9 when the stream kept its own copy of the staging)."""
+    from client_data_ingester_spark.ingestion import ingest_data
+
+    def csv(lo, hi, tag):
+        return "sku,title,active\n" + "".join(
+            f"S{i},{tag}{i},1\n" for i in range(lo, hi)
+        )
+
+    assert ingest_data(
+        spark, products_table, csv(0, 2000, "t").encode(), CFG, 1
+    ).success
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "f1.csv").write_text(csv(1900, 2100, "u"))
+    q = start_ingest_stream(
+        spark,
+        products_table,
+        str(landing),
+        str(tmp_path / "ckpt"),
+        CFG,
+        client_id=1,
+        source_columns=["sku", "title", "active"],
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    rows = products_table.read(spark, 1).collect()
+    assert len(rows) == 2100
+    assert sum(r["title"].startswith("u") for r in rows) == 200
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) <= 7, len(jobs)
+
+
+PARITY_CFG = ParserConfig(
+    "csv",
+    {
+        "sku": ("sku", "text"),
+        "title": ("title", "text"),
+        "active": ("active", "boolean"),
+        "price": ("max_price", "decimal"),
+    },
+)
+PARITY_COLS = ["sku", "title", "active", "price"]
+
+
+def test_stream_and_batch_ingest_agree(spark, tmp_path):
+    """The same files through ingest_data and through start_ingest_stream
+    leave identical tables (ids and last_changed_on aside): an upsert,
+    duplicate skus with nulls, an empty-sku row and a full update. An
+    invalid file fails the upload with exactly the reason the stream
+    dead-letters."""
+    from collections import Counter
+
+    from client_data_ingester_spark.ingestion import ingest_data
+    from client_data_ingester_spark.schemas import CLIENT_PRODUCTS_SCHEMA
+    from client_data_ingester_spark.tables import SnapshotTable
+
+    batch_t = SnapshotTable(str(tmp_path / "batch"), CLIENT_PRODUCTS_SCHEMA)
+    stream_t = SnapshotTable(str(tmp_path / "stream"), CLIENT_PRODUCTS_SCHEMA)
+    header = ",".join(PARITY_COLS) + "\n"
+    files = [
+        # plain upsert into an empty tenant
+        ("S1,One,1,1.50\nS2,Two,1,2.00\nS3,Three,0,\n", False),
+        # updates with nulls, a duplicate sku folded column-wise, an
+        # always-insert empty sku
+        (
+            'S1,,,9.99\nS4,Four,1,4.00\nS4,,0,\nS2,Two-b,,\n"",NoSku,1,5.00\n',
+            False,
+        ),
+        # full update: everything not named here is deactivated
+        ("S1,One-c,1,\nS5,Five,1,5.50\n", True),
+    ]
+
+    def run_stream(i, full_update, dead_letter_dir=None):
+        q = start_ingest_stream(
+            spark,
+            stream_t,
+            str(tmp_path / f"landing{i}"),
+            str(tmp_path / f"ckpt{i}"),
+            PARITY_CFG,
+            client_id=1,
+            source_columns=PARITY_COLS,
+            full_update=full_update,
+            dead_letter_dir=dead_letter_dir,
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    def land(i, body):
+        landing = tmp_path / f"landing{i}"
+        landing.mkdir()
+        path = landing / "f.csv"
+        path.write_text(header + body)
+        return str(path)
+
+    for i, (body, full_update) in enumerate(files):
+        path = land(i, body)
+        rep = ingest_data(
+            spark, batch_t, path, PARITY_CFG, 1, full_update=full_update
+        )
+        assert rep.success, rep.message
+        run_stream(i, full_update)
+
+    def state(t):
+        return Counter(
+            tuple(
+                v
+                for k, v in r.asDict().items()
+                if k not in ("id", "last_changed_on")
+            )
+            for r in t.read(spark, 1).collect()
+        )
+
+    got = state(stream_t)
+    assert got == state(batch_t)
+    assert sum(got.values()) == 6  # S1-S5 and the empty-sku insert
+
+    path = land(len(files), "S9,Bad,maybe,1.00\n")
+    rep = ingest_data(spark, batch_t, path, PARITY_CFG, 1)
+    dl = str(tmp_path / "dead_letter")
+    run_stream(len(files), False, dead_letter_dir=dl)
+    [reason] = [r["_reason"] for r in spark.read.parquet(dl).collect()]
+    assert not rep.success
+    assert rep.message == "Error processing data: " + reason
+    assert state(stream_t) == got  # zero rows changed
