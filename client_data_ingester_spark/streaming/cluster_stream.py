@@ -3,8 +3,8 @@ endgame's cluster labeling continuously up to date as documents arrive.
 
 The batch side persists the cluster labeling as a build artifact
 (operators/dedup.build_cluster_index); this module is its streaming twin,
-built on the repo's append-only merge-on-read shard pattern
-(streaming/users_stream.py): each micro-batch signs ONLY its own
+built on the merge-on-read shard primitive of streaming/compaction.py
+(``write_shard`` / ``read_merged``): each micro-batch signs ONLY its own
 documents and lands two idempotent per-batch shards —
 
 - ``state_dir/bands/batch_id=N``  — the batch's (doc_id, band, key) rows
@@ -55,11 +55,18 @@ from ..operators.dedup import (
     minhash_band_keys,
     warm_start_clusters,
 )
-from .compaction import batch_shard_ids, read_complete_shards
-from .dedup_stream import _doc_stream
+from .compaction import (
+    batch_shard_ids,
+    file_stream,
+    read_merged,
+    start_shard_stream,
+    write_shard,
+)
+from .dedup_stream import DOC_STREAM_SCHEMA
 
-_EDGE_SCHEMA = "doc_a long, doc_b long"
-_BAND_SCHEMA = "doc_id long, band int, key string"
+# shard schemas; both readers filter on the batch_id partition column
+_EDGE_SCHEMA = "doc_a long, doc_b long, batch_id int"
+_BAND_SCHEMA = "doc_id long, band int, key string, batch_id int"
 
 
 def start_cluster_edge_stream(
@@ -83,10 +90,8 @@ def start_cluster_edge_stream(
         # and both edge sources below read the WRITTEN shard back — the
         # shingle-explode + minhash pipeline runs exactly one job per
         # batch instead of once per downstream action
-        minhash_band_keys(docs, num_perm=num_perm, bands=bands).write.mode(
-            "overwrite"
-        ).parquet(f"{bands_dir}/batch_id={batch_id}")
-        keys = spark.read.parquet(f"{bands_dir}/batch_id={batch_id}")
+        signed = minhash_band_keys(docs, num_perm=num_perm, bands=bands)
+        keys = spark.read.parquet(write_shard(signed, bands_dir, batch_id))
         # STAR edges, not pair expansion — the only consumers of the
         # edge shards are connected components (merged_clusters /
         # refresh), which need the buckets connected, not enumerated:
@@ -106,18 +111,10 @@ def start_cluster_edge_stream(
         cross = incremental_lsh_star_edges(
             docs, index, num_perm=num_perm, bands=bands, band_keys=keys
         )
-        within.unionByName(cross).distinct().write.mode(
-            "overwrite"
-        ).parquet(f"{edges_dir}/batch_id={batch_id}")
+        write_shard(within.unionByName(cross).distinct(), edges_dir, batch_id)
 
-    return (
-        _doc_stream(spark, source_dir, reader_options)
-        .writeStream.outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_write_batch)
-        .start()
-    )
+    stream = file_stream(spark, DOC_STREAM_SCHEMA, source_dir, reader_options)
+    return start_shard_stream(stream, checkpoint_dir, query_name, _write_batch)
 
 
 def compact_cluster_state(
@@ -155,25 +152,26 @@ def merged_band_index(
     """All band-key shards folded to one (doc_id, band, key) index
     (merge-on-read; keys are per-document, so plain union is the merge).
     ``before_batch`` restricts to shards of strictly earlier batches.
-    An empty/missing state dir reads as an empty index (the correct
-    nothing-indexed-yet state), not a path error."""
-    df = read_complete_shards(spark, bands_dir)
-    if df is None:
-        return spark.createDataFrame([], _BAND_SCHEMA)
-    if before_batch is not None:
-        df = df.filter(F.col("batch_id") < before_batch)
-    return df.select("doc_id", "band", "key")
+    Empty before the first commit (the nothing-indexed-yet state)."""
+
+    def merge(df: DataFrame) -> DataFrame:
+        if before_batch is not None:
+            df = df.filter(F.col("batch_id") < before_batch)
+        return df.select("doc_id", "band", "key")
+
+    return read_merged(spark, bands_dir, _BAND_SCHEMA, merge)
 
 
 def merged_edges(spark: SparkSession, state_dir: str) -> DataFrame:
     """The cumulative candidate-edge relation across all streamed batches
     (distinct union of shards — replays overwrite their own dir, and the
     read-side distinct absorbs any overlap)."""
-    edges_dir = f"{state_dir}/edges"
-    df = read_complete_shards(spark, edges_dir)
-    if df is None:
-        return spark.createDataFrame([], _EDGE_SCHEMA)
-    return df.select("doc_a", "doc_b").distinct()
+    return read_merged(
+        spark,
+        f"{state_dir}/edges",
+        _EDGE_SCHEMA,
+        lambda df: df.select("doc_a", "doc_b").distinct(),
+    )
 
 
 def merged_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -185,11 +183,6 @@ def merged_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
     if edges.isEmpty():
         return spark.createDataFrame([], "doc_id long, cluster_id long")
     return duplicate_clusters(edges)
-
-
-def _edge_batch_ids(edges_dir: str) -> list[int]:
-    # complete (_SUCCESS-gated) ids only — see compaction.batch_shard_ids
-    return batch_shard_ids(edges_dir)
 
 
 def _watermark_path(path: str) -> str:
@@ -225,31 +218,33 @@ def refresh_cluster_index(
 
     WARM-STARTED: the artifact carries a ``_refresh_watermark.json``
     recording the highest edge batch_id it has folded in. A refresh reads
-    ONLY the edge shards above the watermark (path-pruned —
-    ``batch_id=N`` directories) and folds them into the previous labeling
-    with ``warm_start_clusters``, so the iterative contraction runs over
-    the delta super-graph, not the accumulated corpus edge set. The first
-    refresh (no watermark) is the cold build. Exactly batch-equivalent
-    either way (property-tested: streamed+refreshed == full recompute,
-    including cross-refresh cluster merges)."""
-    edges_dir = f"{state_dir}/edges"
-    batch_ids = _edge_batch_ids(edges_dir)
+    ONLY the edge shards above the watermark (a ``batch_id`` partition
+    filter over the complete shards) and folds them into the previous
+    labeling with ``warm_start_clusters``, so the iterative contraction
+    runs over the delta super-graph, not the accumulated corpus edge set.
+    A compaction landing between the listing and the read only moves
+    folded edges into a higher shard, which the warm start absorbs. The
+    first refresh (no watermark) is the cold build. Exactly
+    batch-equivalent either way (property-tested: streamed+refreshed ==
+    full recompute, including cross-refresh cluster merges)."""
+    batch_ids = batch_shard_ids(f"{state_dir}/edges")
     if not batch_ids:
         build_cluster_index(merged_edges(spark, state_dir), path)
         return
     last = _read_watermark(path)
     if last is None:
         build_cluster_index(merged_edges(spark, state_dir), path)
-        _write_watermark(path, max(batch_ids))
+        _write_watermark(path, batch_ids[-1])
         return
-    new_ids = [b for b in batch_ids if b > last]
-    if not new_ids:
+    if batch_ids[-1] <= last:
         return  # nothing new; artifact already current
-    new_edges = (
-        spark.read.option("basePath", edges_dir)
-        .parquet(*[f"{edges_dir}/batch_id={b}" for b in new_ids])
+    new_edges = read_merged(
+        spark,
+        f"{state_dir}/edges",
+        _EDGE_SCHEMA,
+        lambda df: df.filter(F.col("batch_id") > last)
         .select("doc_a", "doc_b")
-        .distinct()
+        .distinct(),
     )
     old = load_cluster_index(spark, path)
     # materialize BEFORE the overwrite (the new labels derive from the
@@ -260,4 +255,4 @@ def refresh_cluster_index(
         warm_start_clusters(old, new_edges, reliable=reliable), reliable
     )
     updated.write.mode("overwrite").parquet(path)
-    _write_watermark(path, max(batch_ids))
+    _write_watermark(path, batch_ids[-1])

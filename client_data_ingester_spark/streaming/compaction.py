@@ -1,16 +1,28 @@
-"""Shard compaction for the append-only ``batch_id=N`` stream artifacts.
+"""The merge-on-read shard primitive behind every ``batch_id=N`` stream
+artifact, and the compaction that keeps its read side bounded.
 
-Every foreachBatch sink in this package lands one idempotent shard dir
-per micro-batch (``shard_dir/batch_id=N`` + overwrite — the replay-safe
-merge-on-read pattern of streaming/users_stream.py). That bounds WRITE
-cost, but the READ side accumulates one directory (and its part files)
-per batch forever: after a week of 1-minute batches a reader lists ~10k
-dirs before scanning a byte. ``compact_batch_shards`` folds the settled
-prefix of shards into one, so the read-side file count is O(1) in batch
-count between compactions — the same role ``sketch_stream.
-compact_registers`` plays for the HLL/CMS register shards, generalized
-to every batch-shard artifact (cluster band/edge shards, dedup/decontam
-doc shards, PQ code shards, user first-seen shards).
+The lifecycle every shard sink in this package shares lives here and
+nowhere else:
+
+- ``file_stream``: the json file source a maintainer tails;
+- ``start_shard_stream``: the append / queryName / checkpoint /
+  foreachBatch chain;
+- ``write_shard``: one idempotent overwrite of ``shard_dir/batch_id=N``
+  per micro-batch — a replayed batch overwrites its own dir, which makes
+  the sink exactly-once on plain parquet (Structured Streaming's
+  idempotent-sink contract);
+- ``read_merged``: complete shards only, folded by the caller's
+  ``merge``; before the first commit the same ``merge`` runs over an
+  empty relation of the shard schema, so a poller sees "nothing streamed
+  yet" with the schema it will see after the first commit.
+
+A maintainer is then a (per-batch fold, read-side merge) pair. The write
+side is cheap, but the READ side accumulates one directory (and its part
+files) per batch forever: after a week of 1-minute batches a reader lists
+~10k dirs before scanning a byte. ``compact_batch_shards`` folds the
+settled prefix of shards into one, so the read-side file count is O(1) in
+batch count between compactions (cluster band/edge shards, dedup/decontam
+doc shards, PQ code shards, user first-seen shards, sketch registers).
 
 Safety model (why this is correct under crash and replay):
 
@@ -50,10 +62,74 @@ from __future__ import annotations
 
 import contextlib
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from ..tables.committer import Committer, PosixCommitter
+
+
+def file_stream(
+    spark: SparkSession,
+    schema,
+    source_dir: str,
+    reader_options: dict | None = None,
+) -> DataFrame:
+    """Tail a directory of json files with an explicit ``schema``.
+    ``reader_options`` (e.g. ``{"maxFilesPerTrigger": 1}``) are passed
+    to the file source and set the micro-batch granularity."""
+    reader = spark.readStream.schema(schema).options(**(reader_options or {}))
+    return reader.json(source_dir)
+
+
+def start_shard_stream(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    query_name: str,
+    write_batch: Callable[[DataFrame, int], None],
+) -> StreamingQuery:
+    """Start ``stream`` with ``write_batch(batch_df, batch_id)`` as its
+    foreachBatch sink; offsets and sink progress live in
+    ``checkpoint_dir``. ``write_batch`` lands its output through
+    ``write_shard`` so a replayed batch overwrites itself."""
+    return (
+        stream.writeStream.outputMode("append")
+        .queryName(query_name)
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(write_batch)
+        .start()
+    )
+
+
+def write_shard(df: DataFrame, shard_dir: str, batch_id) -> str:
+    """Overwrite ``shard_dir/batch_id=<batch_id>`` with ``df`` and return
+    that path. The overwrite is what makes a replay idempotent; Spark's
+    parquet committer writes the ``_SUCCESS`` marker the read gate
+    checks."""
+    path = f"{shard_dir}/batch_id={batch_id}"
+    df.write.mode("overwrite").parquet(path)
+    return path
+
+
+def read_merged(
+    spark: SparkSession,
+    shard_dir: str,
+    shard_schema,
+    merge: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """``merge`` over the complete shards under ``shard_dir``, read with
+    the explicit ``shard_schema`` (no footer-inference job, so none of
+    its race window either: see ``read_complete_shards``). Before the
+    first commit ``merge`` runs over an empty relation of
+    ``shard_schema`` instead, so the reader's schema cannot change at the
+    first commit. Name ``batch_id`` in ``shard_schema`` only when
+    ``merge`` uses it; otherwise the partition column keeps the type
+    Spark infers from the dir names."""
+    df = read_complete_shards(spark, shard_dir, schema=shard_schema)
+    if df is None:
+        df = spark.createDataFrame([], shard_schema)
+    return merge(df)
 
 
 def _complete(shard_dir: str, d: str) -> bool:
@@ -71,8 +147,8 @@ def batch_shard_ids(shard_dir: str) -> list[int]:
     LAST, so a reader racing a compaction install sees the target dir
     either absent-of-marker (skipped here: reads as the documented
     folded-rows-missing maintenance window) or fully installed — never
-    a torn subset of the folded rows. Every foreachBatch sink in this
-    package writes through Spark's parquet committer, which emits
+    a torn subset of the folded rows. Every shard sink writes through
+    ``write_shard``, i.e. Spark's parquet committer, which emits
     ``_SUCCESS`` per job (don't disable
     ``mapreduce.fileoutputcommitter.marksuccessfuljobs`` on these
     paths)."""

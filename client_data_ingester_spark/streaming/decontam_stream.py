@@ -18,9 +18,9 @@ Scale/exactly-once design:
   scan → broadcast-probe → doc_id fold; no stream state at all (the
   screen is stateless per document — nothing to checkpoint beyond
   offsets);
-- both sinks use the idempotent per-batch-dir recipe
-  (``dir/batch_id=N`` + overwrite): a replayed batch overwrites itself,
-  so routing is exactly-once on non-transactional storage;
+- both sinks are one ``compaction.write_shard`` per micro-batch: a
+  replayed batch overwrites itself, so routing is exactly-once on
+  non-transactional storage;
 - the SAME probe operator (``sketch.bloom_probe``) serves batch backfills
   and the live stream — one code path, one false-positive budget.
 """
@@ -29,17 +29,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from pyspark.sql import types as T
-
 from ..operators.sketch import BLOOM_K, bloom_probe
-from .dedup_stream import _doc_stream
+from .compaction import file_stream, read_merged, start_shard_stream, write_shard
+from .dedup_stream import DOC_STREAM_SCHEMA
 
 # what lands in clean_dir / quarantine_dir (batch_id is the partition
-# dir). Read the dirs back through read_routed(): a stream that never
-# flagged (or never cleared) a document leaves only empty batch dirs, and
-# schema INFERENCE over those fails — the explicit schema must travel.
+# dir); read_routed reads with it
 ROUTED_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -53,16 +51,9 @@ ROUTED_SCHEMA = T.StructType(
 
 
 def read_routed(spark: SparkSession, routed_dir: str) -> DataFrame:
-    """Read a clean/quarantine dir with the explicit routed schema —
-    safe when every batch so far routed zero documents to this side,
-    and gated on complete (_SUCCESS-carrying) shards so a racing
-    compaction install never exposes a torn fold."""
-    from .compaction import read_complete_shards
-
-    df = read_complete_shards(spark, routed_dir, schema=ROUTED_SCHEMA)
-    if df is None:
-        return spark.createDataFrame([], ROUTED_SCHEMA)
-    return df
+    """Read a clean/quarantine dir as ``ROUTED_SCHEMA`` — also when every
+    batch so far routed zero documents to this side."""
+    return read_merged(spark, routed_dir, ROUTED_SCHEMA, lambda df: df)
 
 
 def start_decontam_stream(
@@ -92,8 +83,8 @@ def start_decontam_stream(
     Drive deterministically with ``processAllAvailable()``; read results
     with :func:`read_routed` (``batch_id`` is a partition column, and the
     explicit schema keeps an all-empty side readable). ``reader_options``
-    passes file-source knobs (e.g. ``maxFilesPerTrigger``) through to the
-    shared doc-stream reader.
+    passes file-source knobs (e.g. ``maxFilesPerTrigger``) through to
+    ``compaction.file_stream``.
     """
     bits = eval_bits.cache()  # static side, reused every micro-batch
 
@@ -114,20 +105,12 @@ def start_decontam_stream(
         # work runs once per micro-batch, not once per sink
         routed.persist()
         try:
-            routed.filter(~F.col("flagged")).write.mode("overwrite").parquet(
-                f"{clean_dir}/batch_id={batch_id}"
-            )
-            routed.filter(F.col("flagged")).write.mode("overwrite").parquet(
-                f"{quarantine_dir}/batch_id={batch_id}"
+            write_shard(routed.filter(~F.col("flagged")), clean_dir, batch_id)
+            write_shard(
+                routed.filter(F.col("flagged")), quarantine_dir, batch_id
             )
         finally:
             routed.unpersist()
 
-    stream = _doc_stream(spark, source_dir, reader_options)
-    return (
-        stream.writeStream.outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_route_batch)
-        .start()
-    )
+    stream = file_stream(spark, DOC_STREAM_SCHEMA, source_dir, reader_options)
+    return start_shard_stream(stream, checkpoint_dir, query_name, _route_batch)

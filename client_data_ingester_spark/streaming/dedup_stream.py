@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import norm_text
+from .compaction import file_stream, start_shard_stream, write_shard
 
 DOC_STREAM_SCHEMA = T.StructType(
     [
@@ -53,17 +54,6 @@ def dedup_stream(
     )
 
 
-def _doc_stream(
-    spark: SparkSession,
-    source_dir: str,
-    reader_options: dict | None = None,
-) -> DataFrame:
-    reader = spark.readStream.schema(DOC_STREAM_SCHEMA).format("json")
-    for k, v in (reader_options or {}).items():
-        reader = reader.option(k, v)
-    return reader.load(source_dir)
-
-
 def start_dedup_stream(
     spark: SparkSession,
     source_dir: str,
@@ -78,7 +68,9 @@ def start_dedup_stream(
     :func:`start_dedup_stream_to_parquet`.
     """
     return (
-        dedup_stream(_doc_stream(spark, source_dir), watermark_delay)
+        dedup_stream(
+            file_stream(spark, DOC_STREAM_SCHEMA, source_dir), watermark_delay
+        )
         .writeStream.outputMode("append")
         .format("memory")
         .queryName(query_name)
@@ -99,35 +91,23 @@ def start_dedup_stream_to_parquet(
     """Production sink: first-seen documents land as parquet, exactly-once
     across restarts and replays.
 
-    ``foreachBatch`` + one partition dir per micro-batch
-    (``output_dir/batch_id=N``, written with overwrite) makes the sink
+    One ``compaction.write_shard`` per micro-batch makes the sink
     IDEMPOTENT: after a crash between "batch written" and "offset
     committed", the restarted query replays the same batchId into the same
-    dir and overwrites its own partial output instead of duplicating rows —
-    the standard exactly-once recipe for non-transactional stores. The
-    dedup STATE (seen digests within the watermark horizon) lives in the
-    checkpoint, so a restart keeps dropping duplicates of documents that
-    arrived before the crash; read the result with
-    ``spark.read.parquet(output_dir)`` (``batch_id`` is a partition
-    column).
+    dir and overwrites its own partial output instead of duplicating rows.
+    The dedup STATE (seen digests within the watermark horizon) lives in
+    the checkpoint, so a restart keeps dropping duplicates of documents
+    that arrived before the crash. Read the result with
+    ``compaction.read_complete_shards(spark, output_dir)`` (``batch_id``
+    is a partition column): unlike a plain ``spark.read.parquet``, it
+    skips a shard that :func:`compact_output` is still installing.
     """
-
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite").parquet(
-                f"{output_dir}/batch_id={batch_id}"
-            )
-        )
-
-    return (
-        dedup_stream(
-            _doc_stream(spark, source_dir, reader_options), watermark_delay
-        )
-        .writeStream.outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_write_batch)
-        .start()
+    docs = file_stream(spark, DOC_STREAM_SCHEMA, source_dir, reader_options)
+    return start_shard_stream(
+        dedup_stream(docs, watermark_delay),
+        checkpoint_dir,
+        query_name,
+        lambda batch_df, batch_id: write_shard(batch_df, output_dir, batch_id),
     )
 
 

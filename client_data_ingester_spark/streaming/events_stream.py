@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from .compaction import file_stream
 from .sketch_stream import EVENT_STREAM_SCHEMA
 
 # ONE definition of the core event fields (sketch_stream owns the shared
@@ -122,10 +123,11 @@ def start_windowed_event_stream(
     does not support checkpoint recovery, so tests keep one long-lived query
     rather than restarting (a durable sink would restart via foreachBatch +
     the checkpoint, as ingest_stream does)."""
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA).format("json").load(source_dir)
+    agg = windowed_event_counts(
+        file_stream(spark, EVENT_SCHEMA, source_dir),
+        window_duration,
+        watermark_delay,
     )
-    agg = windowed_event_counts(stream, window_duration, watermark_delay)
     return (
         agg.writeStream.outputMode("append")
         .format("memory")

@@ -21,7 +21,8 @@ optimistic-concurrency retry. This module adds only what a stream needs:
   twice; the TABLE is exactly-once, the error channel is at-least-once.)
 
 Event-time windowed aggregation over the ``events`` table (watermarks, late
-data) lives in operators/events.py; this module is the ingest stream.
+data) lives in streaming/events_stream.py, with its batch twins in
+operators/events.py; this module is the ingest stream.
 """
 
 from __future__ import annotations

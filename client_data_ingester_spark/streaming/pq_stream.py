@@ -14,10 +14,9 @@ Scale/exactly-once design:
 - the codebook side is static and tiny (m x k rows), so every
   micro-batch plan is scan → map-side subvector fan-out → broadcast
   assign; no stream state (nothing to checkpoint beyond offsets);
-- the sink uses the idempotent per-batch-dir recipe
-  (``codes_dir/batch_id=N`` + overwrite): a replayed batch overwrites
-  itself, so the code table is exactly-once on non-transactional
-  storage;
+- the sink is one ``compaction.write_shard`` per micro-batch: a
+  replayed batch overwrites itself, so the code table is exactly-once
+  on non-transactional storage;
 - codes are append-only between re-trainings; a re-training bumps the
   index version dir and the stream restarts against the new codebooks
   (same rotation as any persisted-artifact refresh).
@@ -26,11 +25,11 @@ Scale/exactly-once design:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.similarity import pq_encode
+from .compaction import file_stream, read_merged, start_shard_stream, write_shard
 
 VEC_STREAM_SCHEMA = T.StructType(
     [
@@ -40,8 +39,7 @@ VEC_STREAM_SCHEMA = T.StructType(
     ]
 )
 
-# explicit read-back schema: an all-empty stream leaves only empty batch
-# dirs, and inference over those fails — the schema must travel
+# the code shards' schema (read_merged reads with it)
 CODES_SCHEMA = T.StructType(
     [
         T.StructField("vec_id", T.LongType()),
@@ -75,31 +73,18 @@ def start_pq_encode_stream(
         codes = pq_encode(
             batch_df.select("vec_id", "embedding"), books, dim=dim, m=m
         )
-        codes.write.mode("overwrite").parquet(
-            f"{codes_dir}/batch_id={batch_id}"
-        )
+        write_shard(codes, codes_dir, batch_id)
 
-    reader = spark.readStream.schema(VEC_STREAM_SCHEMA).format("json")
-    for k, v in (reader_options or {}).items():
-        reader = reader.option(k, v)
-    stream = reader.load(source_dir)
-    return (
-        stream.writeStream.outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_encode_batch)
-        .start()
-    )
+    stream = file_stream(spark, VEC_STREAM_SCHEMA, source_dir, reader_options)
+    return start_shard_stream(stream, checkpoint_dir, query_name, _encode_batch)
 
 
 def read_codes(spark: SparkSession, codes_dir: str) -> DataFrame:
-    """The cumulative streamed code table (merge-on-read over batch
-    shards; replays are idempotent per shard dir). Returns an EMPTY
-    typed relation before the first commit so pollers never hit
-    path-not-found."""
-    from .compaction import read_complete_shards
-
-    df = read_complete_shards(spark, codes_dir, schema=CODES_SCHEMA)
-    if df is None:
-        return spark.createDataFrame([], CODES_SCHEMA)
-    return df.select("vec_id", "sub", "code", "dist_sq")
+    """The cumulative streamed code table ``(vec_id, sub, code, dist_sq)``
+    (merge-on-read over batch shards; empty before the first commit)."""
+    return read_merged(
+        spark,
+        codes_dir,
+        CODES_SCHEMA,
+        lambda df: df.select("vec_id", "sub", "code", "dist_sq"),
+    )

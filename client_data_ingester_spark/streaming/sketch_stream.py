@@ -3,12 +3,11 @@ counts and Count-Min frequencies over an event stream.
 
 The batch sketch (operators/sketch.py) made register state an open,
 mergeable DataFrame; this module closes the loop for streams. Each
-micro-batch writes ONLY its own registers to an idempotent per-batch dir
-(``register_dir/batch_id=N``, overwrite — the same exactly-once recipe as
-the streaming dedup parquet sink: a replayed batch overwrites itself).
-Estimates are MERGE-ON-READ: readers fold all shards with
-``groupBy(group, bucket).max(r)`` — associative, order- and
-replay-insensitive — then apply the standard estimate.
+micro-batch writes ONLY its own registers as one shard
+(``compaction.write_shard``: a replayed batch overwrites itself).
+Estimates are MERGE-ON-READ (``compaction.read_merged``): readers fold
+all shards with ``groupBy(group, bucket).max(r)`` — associative, order-
+and replay-insensitive — then apply the standard estimate.
 
 Why this shape at scale:
 - the stream job does no read-modify-write of global state (no lock, no
@@ -32,6 +31,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.sketch import DEFAULT_P, hll_estimate, hll_registers
+from .compaction import file_stream, read_merged, start_shard_stream, write_shard
 
 EVENT_STREAM_SCHEMA = T.StructType(
     [
@@ -62,23 +62,11 @@ def start_hll_register_stream(
     group_cols = list(group_cols or [])
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            hll_registers(batch_df, value_col, group_cols, p)
-            .write.mode("overwrite")
-            .parquet(f"{register_dir}/batch_id={batch_id}")
-        )
+        regs = hll_registers(batch_df, value_col, group_cols, p)
+        write_shard(regs, register_dir, batch_id)
 
-    reader = spark.readStream.schema(EVENT_STREAM_SCHEMA).format("json")
-    for k, v in (reader_options or {}).items():
-        reader = reader.option(k, v)
-    stream = reader.load(source_dir)
-    return (
-        stream.writeStream.outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_write_batch)
-        .start()
-    )
+    stream = file_stream(spark, EVENT_STREAM_SCHEMA, source_dir, reader_options)
+    return start_shard_stream(stream, checkpoint_dir, query_name, _write_batch)
 
 
 def merged_registers(
@@ -86,25 +74,21 @@ def merged_registers(
     register_dir: str,
     group_cols: list[str] | None = None,
 ) -> DataFrame:
-    """All shards folded to one register table (merge-on-read).
-
-    Returns an EMPTY typed relation before the first micro-batch commit
-    (same poller contract as ``pq_stream.read_codes`` /
-    ``cluster_stream.merged_band_index``: a reader racing the stream's
-    first batch must see "nothing streamed yet", not PATH_NOT_FOUND).
-    Group-column types come from ``EVENT_STREAM_SCHEMA`` — the only
-    source these register streams ever read."""
-    from .compaction import read_complete_shards
-
+    """All shards folded to one register table (merge-on-read; empty
+    before the first commit). Group-column types come from
+    ``EVENT_STREAM_SCHEMA`` — the only source these register streams
+    ever read."""
     group_cols = list(group_cols or [])
-    df = read_complete_shards(spark, register_dir)
-    if df is None:
-        fields = [EVENT_STREAM_SCHEMA[c] for c in group_cols] + [
-            T.StructField("bucket", T.LongType()),
-            T.StructField("r", T.IntegerType()),
-        ]
-        return spark.createDataFrame([], T.StructType(fields))
-    return df.groupBy(*group_cols, "bucket").agg(F.max("r").alias("r"))
+    fields = [EVENT_STREAM_SCHEMA[c] for c in group_cols] + [
+        T.StructField("bucket", T.LongType()),
+        T.StructField("r", T.IntegerType()),
+    ]
+    return read_merged(
+        spark,
+        register_dir,
+        T.StructType(fields),
+        lambda df: df.groupBy(*group_cols, "bucket").agg(F.max("r").alias("r")),
+    )
 
 
 def read_hll_estimate(
@@ -132,12 +116,8 @@ def compact_registers(
     root for readers). Estimates before and after are identical; max-merge
     idempotence means late replays against the old root stay mergeable."""
     group_cols = list(group_cols or [])
-    (
-        merged_registers(spark, register_dir, group_cols)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{compacted_dir}/batch_id=compacted")
-    )
+    merged = merged_registers(spark, register_dir, group_cols).coalesce(1)
+    write_shard(merged, compacted_dir, "compacted")
 
 
 def start_cms_register_stream(
@@ -159,24 +139,11 @@ def start_cms_register_stream(
     width = CMS_WIDTH if width is None else width
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            cms_registers(batch_df, value_col, depth, width)
-            .write.mode("overwrite")
-            .parquet(f"{register_dir}/batch_id={batch_id}")
-        )
+        regs = cms_registers(batch_df, value_col, depth, width)
+        write_shard(regs, register_dir, batch_id)
 
-    stream = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .format("json")
-        .load(source_dir)
-    )
-    return (
-        stream.writeStream.outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_write_batch)
-        .start()
-    )
+    stream = file_stream(spark, EVENT_STREAM_SCHEMA, source_dir)
+    return start_shard_stream(stream, checkpoint_dir, query_name, _write_batch)
 
 
 def read_cms_estimate(
@@ -192,21 +159,14 @@ def read_cms_estimate(
     standard CMS min-over-rows probe."""
     from ..operators.sketch import CMS_DEPTH, CMS_WIDTH, cms_estimate
 
-    from .compaction import read_complete_shards
-
     depth = CMS_DEPTH if depth is None else depth
     width = CMS_WIDTH if width is None else width
-    df = read_complete_shards(spark, register_dir)
-    if df is None:
-        # before the first commit: zero increments, so every probe
-        # estimates from the empty register table instead of the reader
-        # crashing with PATH_NOT_FOUND (poller contract shared with
-        # merged_registers / pq_stream.read_codes)
-        merged = spark.createDataFrame(
-            [], "r INT, bucket BIGINT, cnt BIGINT"
-        )
-    else:
-        merged = df.groupBy("r", "bucket").agg(F.sum("cnt").alias("cnt"))
+    merged = read_merged(
+        spark,
+        register_dir,
+        "r INT, bucket BIGINT, cnt BIGINT",
+        lambda df: df.groupBy("r", "bucket").agg(F.sum("cnt").alias("cnt")),
+    )
     return cms_estimate(merged, probes, key_col, depth, width)
 
 
@@ -233,23 +193,11 @@ def start_reservoir_register_stream(
     group_cols = list(group_cols or [])
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            reservoir_registers(batch_df, value_col, k, group_cols)
-            .write.mode("overwrite")
-            .parquet(f"{register_dir}/batch_id={batch_id}")
-        )
+        regs = reservoir_registers(batch_df, value_col, k, group_cols)
+        write_shard(regs, register_dir, batch_id)
 
-    reader = spark.readStream.schema(EVENT_STREAM_SCHEMA).format("json")
-    for kk, v in (reader_options or {}).items():
-        reader = reader.option(kk, v)
-    stream = reader.load(source_dir)
-    return (
-        stream.writeStream.outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_write_batch)
-        .start()
-    )
+    stream = file_stream(spark, EVENT_STREAM_SCHEMA, source_dir, reader_options)
+    return start_shard_stream(stream, checkpoint_dir, query_name, _write_batch)
 
 
 def read_reservoir_sample(
@@ -261,35 +209,30 @@ def read_reservoir_sample(
 ) -> DataFrame:
     """Current bottom-k sample over everything streamed so far — exactly
     equal to a batch ``reservoir_registers`` over the union of all
-    micro-batch inputs (asserted in tests). Empty typed relation before
-    the first commit (the shared poller contract); ``value_col`` names
-    the streamed column the registers sample so the pre-first-commit
-    ``v`` type matches what post-commit shards will carry (a LongType
-    default against event_type shards would flip the reader's schema at
-    the first commit boundary)."""
+    micro-batch inputs (asserted in tests). ``value_col`` names the
+    streamed column the registers sample: it types the shard's ``v``
+    (a LongType default against event_type shards would misread them)."""
     from pyspark.sql import Window
 
     from ..operators.sketch import RESERVOIR_K
 
-    from .compaction import read_complete_shards
-
     k = RESERVOIR_K if k is None else k
     group_cols = list(group_cols or [])
-    df = read_complete_shards(spark, register_dir)
-    if df is None:
-        fields = [EVENT_STREAM_SCHEMA[c] for c in group_cols] + [
-            T.StructField("pos", T.IntegerType()),
-            T.StructField("v", EVENT_STREAM_SCHEMA[value_col].dataType),
-            T.StructField("hk", T.LongType()),
-        ]
-        return spark.createDataFrame([], T.StructType(fields))
+    fields = [EVENT_STREAM_SCHEMA[c] for c in group_cols] + [
+        T.StructField("pos", T.IntegerType()),
+        T.StructField("v", EVENT_STREAM_SCHEMA[value_col].dataType),
+        T.StructField("hk", T.LongType()),
+    ]
     w = Window.partitionBy(*group_cols).orderBy("hk", "v")
-    return (
-        df.select(*group_cols, "v", "hk")
+    return read_merged(
+        spark,
+        register_dir,
+        T.StructType(fields),
+        lambda df: df.select(*group_cols, "v", "hk")
         .distinct()
         .withColumn("pos", F.row_number().over(w))
         .where(F.col("pos") <= k)
-        .select(*group_cols, "pos", "v", "hk")
+        .select(*group_cols, "pos", "v", "hk"),
     )
 
 

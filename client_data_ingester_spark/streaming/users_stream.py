@@ -3,13 +3,13 @@ distinct-user growth curve over an event stream.
 
 The batch operator (operators/events.cumulative_unique_users) folds each
 user to their first-seen bucket; this module keeps that fold continuously
-up to date with the repo's merge-on-read shard pattern
-(streaming/sketch_stream.py): each micro-batch writes ONLY its own
-(user_id, first-bucket-in-batch) rows to an idempotent per-batch dir
-(``shard_dir/batch_id=N``, overwrite — a replayed batch overwrites
-itself), and readers fold all shards with ``groupBy(user_id).min(_first)``
-— associative and replay-insensitive, so the merged fold is EXACTLY the
-batch fold over the union of everything streamed (asserted in tests).
+up to date with the merge-on-read shard primitive of
+streaming/compaction.py: each micro-batch writes ONLY its own
+(user_id, first-bucket-in-batch) rows as one shard (``write_shard``: a
+replayed batch overwrites itself), and readers fold all shards with
+``groupBy(user_id).min(_first)`` (``read_merged``) — associative and
+replay-insensitive, so the merged fold is EXACTLY the batch fold over the
+union of everything streamed (asserted in tests).
 
 Why this shape at scale:
 - no global state store and no read-modify-write: the stream job never
@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.events import cumulative_from_first_seen
+from .compaction import file_stream, read_merged, start_shard_stream, write_shard
 from .sketch_stream import EVENT_STREAM_SCHEMA
 
 
@@ -43,44 +44,26 @@ def start_first_seen_stream(
     batch's per-user first-seen fold in its own idempotent shard dir."""
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy("user_id")
-            .agg(F.min(F.date_trunc(unit, F.col("ts"))).alias("_first"))
-            .write.mode("overwrite")
-            .parquet(f"{shard_dir}/batch_id={batch_id}")
+        first = batch_df.groupBy("user_id").agg(
+            F.min(F.date_trunc(unit, F.col("ts"))).alias("_first")
         )
+        write_shard(first, shard_dir, batch_id)
 
-    stream = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .format("json")
-        .load(source_dir)
-    )
-    return (
-        stream.writeStream.outputMode("append")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_write_batch)
-        .start()
-    )
+    stream = file_stream(spark, EVENT_STREAM_SCHEMA, source_dir)
+    return start_shard_stream(stream, checkpoint_dir, query_name, _write_batch)
 
 
 def merged_first_seen(spark: SparkSession, shard_dir: str) -> DataFrame:
     """All shards folded to one (user_id, _first) registry
-    (merge-on-read; MIN is associative and replay-idempotent).
-
-    Before the stream's first micro-batch commits a shard the directory
-    does not exist yet; readers polling early get an EMPTY registry (the
-    correct zero-users state) instead of a path-not-found error. Only
-    COMPLETE (_SUCCESS-carrying) shards are read, so a racing compaction
-    install can never expose a torn fold (compaction.batch_shard_ids)."""
-    from .compaction import read_complete_shards
-
-    df = read_complete_shards(spark, shard_dir)
-    if df is None:
-        return spark.createDataFrame(
-            [], "user_id long, _first timestamp"
-        )
-    return df.groupBy("user_id").agg(F.min("_first").alias("_first"))
+    (merge-on-read; MIN is associative and replay-idempotent). Before the
+    first commit this is the EMPTY registry — the correct zero-users
+    state."""
+    return read_merged(
+        spark,
+        shard_dir,
+        "user_id long, _first timestamp",
+        lambda df: df.groupBy("user_id").agg(F.min("_first").alias("_first")),
+    )
 
 
 def read_cumulative_users(
