@@ -81,16 +81,17 @@ class AuthService:
         table state from a snapshot read, so a publish that lands in between
         would silently lose the racer's update (two signups minting the same
         id, a login overwriting a concurrent signup's row). ``build(df,
-        manifest)`` recomputes the new state from a FRESH read each attempt;
-        ``expected_version`` makes the publish conditional on nothing having
-        changed, and a conflict loops back to re-read."""
+        head)`` recomputes the new state from a FRESH read each attempt
+        (``head`` is the head version doc; builders read only its
+        ``props``); ``expected_version`` makes the publish conditional on
+        nothing having changed, and a conflict loops back to re-read."""
         last: SnapshotConflictError | None = None
         for _ in range(attempts):
-            manifest = table.current_manifest()
-            new_df = build(table.read(spark), manifest)
+            head = table.current_doc()
+            new_df = build(table.read(spark), head)
             try:
                 return table.overwrite_all(
-                    new_df, expected_version=manifest.version
+                    new_df, expected_version=head.version
                 )
             except SnapshotConflictError as e:
                 last = e
@@ -118,18 +119,18 @@ class AuthService:
         now = _now()
         minted: dict[str, int] = {}
 
-        def build_client(clients, manifest):
-            minted["cid"] = int(manifest.props.get("max_id", 0)) + 1
+        def build_client(clients, head):
+            minted["cid"] = int(head.props.get("max_id", 0)) + 1
             row = spark.createDataFrame(
                 [(minted["cid"], company_name, now, address, True)],
                 schema=CLIENTS_SCHEMA,
             )
             return clients.unionByName(row)
 
-        def build_user(users, manifest):
+        def build_user(users, head):
             if users.filter(F.col("email") == email).limit(1).count():
                 raise AuthError("Email already registered")
-            minted["uid"] = int(manifest.props.get("max_id", 0)) + 1
+            minted["uid"] = int(head.props.get("max_id", 0)) + 1
             row = spark.createDataFrame(
                 [
                     (
@@ -172,7 +173,7 @@ class AuthService:
             raise AuthError("Invalid credentials")
         token = secrets.token_urlsafe(32)
 
-        def build(current, manifest):
+        def build(current, head):
             return current.withColumn(
                 "session_token",
                 F.when(F.col("email") == email, F.lit(token)).otherwise(
@@ -191,7 +192,7 @@ class AuthService:
 
     # -- logout (B/web/api/auth.py:77-94) ----------------------------------
     def logout(self, spark: SparkSession, token: str) -> None:
-        def build(current, manifest):
+        def build(current, head):
             return current.withColumn(
                 "session_token",
                 F.when(

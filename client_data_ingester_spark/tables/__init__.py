@@ -1,3 +1,3 @@
-from .snapshot import IdModeError, SnapshotConflictError, SnapshotTable
+from .snapshot import SnapshotConflictError, SnapshotTable
 
-__all__ = ["IdModeError", "SnapshotConflictError", "SnapshotTable"]
+__all__ = ["SnapshotConflictError", "SnapshotTable"]

@@ -48,8 +48,7 @@ concurrent) compose four mechanisms:
   the head, re-points the advisory pointer, and the commit loop REBASES:
   the manifest delta is re-encoded onto the new head without recomputing
   data; only a racer that touched the SAME partitions (``expected_version``)
-  or moved the id ledger (``expected_max_id``) surfaces
-  ``SnapshotConflictError`` for the caller to re-merge;
+  surfaces ``SnapshotConflictError`` for the caller to re-merge;
 - surrogate-id minting reserves disjoint blocks up front through the
   ``_IDSEQ`` conditional-put CAS chain (``reserve_id_block``), so id
   collisions cannot force cross-tenant serialization.
@@ -69,7 +68,7 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Iterable, Mapping
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -98,16 +97,6 @@ _REBASE_MAX_ATTEMPTS = 12
 
 def _rebase_backoff(attempt: int) -> None:
     time.sleep(random.uniform(0.0, min(0.5, 0.02 * 2**attempt)))
-
-
-class IdModeError(RuntimeError):
-    """A legacy ``expected_max_id``-minting commit hit a table whose id
-    space is governed by ``reserve_id_block`` reservations. Deliberately
-    NOT a :class:`SnapshotConflictError`: retrying cannot help (the
-    modes are structurally incompatible — a props-minting writer cannot
-    see in-flight reservations, so ids would silently overlap), and
-    conflict-retry loops must not mask it as transient. The fix is to
-    switch the caller to ``reserve_id_block``."""
 
 
 class SnapshotConflictError(RuntimeError):
@@ -393,11 +382,10 @@ class SnapshotTable:
         """Atomically reserve ``n`` surrogate ids; returns ``base`` — the
         caller owns ids ``base+1 .. base+n`` exclusively.
 
-        This is the concurrent-writer replacement for the
-        ``expected_max_id`` guard: instead of minting from the manifest's
-        ``max_id`` and conflicting (full merge recompute) whenever ANY
-        writer advanced it, each writer CAS-reserves a disjoint block up
-        front — a DB sequence in object-store primitives (the reference
+        This is how every writer mints surrogate ids: instead of minting
+        from the manifest's ``max_id`` and conflicting (full merge
+        recompute) whenever ANY writer advanced it, each writer
+        CAS-reserves a disjoint block up front — a DB sequence in object-store primitives (the reference
         gets this from its Postgres sequence). The sequence is a chain of
         conditional-put files ``_IDSEQ.v{k}`` whose content is the next
         unreserved id; reserving = create ``v{k+1}`` with value+n. Gaps
@@ -406,17 +394,13 @@ class SnapshotTable:
 
         Initialization bridges from the serial world: with no sequence
         files the base comes from the manifest's ``max_id``, so a table's
-        first reserving writer continues exactly where legacy commits
-        left off. MIXING modes on one table is REFUSED, not merely
-        documented-unsafe: once any ``_IDSEQ`` slot exists, an
-        ``expected_max_id``-minting commit raises :class:`IdModeError`
-        (checked before staging AND under the write lock in
-        ``overwrite_partitions``) — a props-minting writer cannot see
-        in-flight reservations, so letting it through could mint
-        overlapping ids with no loud failure. A table's minting writers
-        either all reserve (this package's ingest paths do) or all pass
-        ``expected_max_id``; the first reservation permanently switches
-        the table to reservation mode.
+        first reserving writer continues exactly where earlier commits
+        left off (their written ids already raised ``max_id``, see the
+        monotone fold in ``_stage_and_commit``). From then on the
+        sequence, not the manifest, is the id authority: a writer that
+        minted from ``max_id`` instead cannot see in-flight reservations
+        and could hand out ids a reserver already owns, which is why the
+        table layer offers no such mode.
 
         Retention: a verified winner of ``v{k+1}`` sweeps every slot
         below ``v{k}``, keeping at most two live files in steady state;
@@ -448,8 +432,8 @@ class SnapshotTable:
                 f"committer {self.committer.name!r} declares "
                 "consistent_list=False: id-block reservation requires "
                 "read-after-write-consistent LIST (see the committer "
-                "module's store requirements); use expected_max_id "
-                "minting or a store with strong LIST consistency"
+                "module's store requirements); use a store with strong "
+                "LIST consistency"
             )
         for _ in range(200):
             k, val = self._seq_head()
@@ -591,9 +575,10 @@ class SnapshotTable:
     def _write_lock(self, timeout: float = 60.0, poll: float = 0.05):
         """Per-table writer lock (O_CREAT|O_EXCL lock file).
 
-        Held across read-manifest → stage-data → publish so concurrent
-        writers serialize instead of both publishing version N+1 and silently
-        losing one writer's partitions (the lost-update race)."""
+        Held across the commit section (read head → check → encode →
+        conditional put) so concurrent writers serialize instead of both
+        publishing version N+1 and silently losing one writer's partitions
+        (the lost-update race). Data staging runs outside it."""
         path = os.path.join(self.root, _MANIFEST + ".lock")
         deadline = time.monotonic() + timeout
         while True:
@@ -678,6 +663,24 @@ class SnapshotTable:
         else:
             self._gc_full_sweep(version)
 
+    def _live_refs(self, versions: Iterable[int]):
+        """(data dirs, group-file names, version-file names) referenced by
+        the committed ``versions`` still on disk: the live set both the
+        commit-path sweep and ``vacuum`` keep."""
+        dirs: set[str] = set()
+        groups: set[str] = set()
+        manifests: set[str] = set()
+        for v in versions:
+            doc = self._doc_at(v)
+            if doc is None:
+                continue
+            manifests.add(os.path.basename(self._manifest_path(v)))
+            for ds in doc.all_partitions().values():
+                dirs.update(ds)
+            for gid, sha in doc.groups.items():
+                groups.add(os.path.basename(self._group_path(int(gid), sha)))
+        return dirs, groups, manifests
+
     def _gc_full_sweep(self, latest_version: int) -> None:
         """Single-layout retention: recompute the live set from the kept
         versions and sweep the root listing. O(table entries) per commit
@@ -686,17 +689,6 @@ class SnapshotTable:
         horizon = latest_version - self.keep_versions
         if horizon <= 0:
             return
-        live_dirs: set[str] = set()
-        live_groups: set[str] = set()
-        for v in range(max(1, horizon), latest_version + 1):
-            doc = self._doc_at(v)
-            if doc is not None:
-                for dirs in doc.all_partitions().values():
-                    live_dirs.update(dirs)
-                for gid, sha in doc.groups.items():
-                    live_groups.add(os.path.basename(
-                        self._group_path(int(gid), sha)
-                    ))
         # ORDER MATTERS: snapshot the dir listing BEFORE the intent
         # listing. Staging (outside the write lock) puts the intent
         # marker before creating the dir, so a writer racing this sweep
@@ -708,23 +700,17 @@ class SnapshotTable:
         # COMMITTED dir (rmtree races the parquet job commit).
         listing = self.committer.list_prefix(self.root, "")  # full LIST
         staging = self._intent_dirs()
-        # lock-BYPASSING racers (cross-host writers on shared storage):
-        # one may have COMMITTED a version above ours and cleared its
-        # intent after our intent listing — extend the live set to the
-        # true committed head, derived AFTER both listings. A commit
-        # landing after this check still had its intent alive at the
-        # intent listing (intents clear only post-commit), so its dirs
-        # are staging-shielded instead (r13 review).
-        true_latest = self._max_committed_version()
-        for v in range(latest_version + 1, true_latest + 1):
-            doc = self._doc_at(v)
-            if doc is not None:
-                for dirs in doc.all_partitions().values():
-                    live_dirs.update(dirs)
-                for gid, sha in doc.groups.items():
-                    live_groups.add(os.path.basename(
-                        self._group_path(int(gid), sha)
-                    ))
+        # The live set spans the kept versions up to the TRUE committed
+        # head, derived AFTER both listings: a lock-BYPASSING racer
+        # (cross-host writer on shared storage) may have COMMITTED a
+        # version above ours and cleared its intent after our intent
+        # listing. A commit landing after this check still had its
+        # intent alive at the intent listing (intents clear only
+        # post-commit), so its dirs are staging-shielded instead (r13
+        # review).
+        live_dirs, live_groups, _ = self._live_refs(
+            range(max(1, horizon), self._max_committed_version() + 1)
+        )
         for name in listing:
             full = os.path.join(self.root, name)
             if name.startswith(_GROUP_PREFIX):
@@ -867,31 +853,12 @@ class SnapshotTable:
         # change the count); the constructor value applies only on the
         # single→sharded migration commit.
         ng = doc.n_groups if doc.layout == "sharded" else self.manifest_groups
+        changed: dict[int, list[str]] = {}
         if doc.layout == "single" and doc.obj.get("partitions"):
             # layout migration: this commit regroups the whole single
-            # blob. Carried dirs' ownership is unknown (the single
-            # layout never tracked which dirs back multiple
-            # partitions), so all of them are conservatively marked
-            # shared — never ledger-deleted; vacuum() reclaims them
-            # once genuinely unreferenced.
-            migrated: dict[int, dict] = {}
-            for v, ds in doc.all_partitions().items():
-                g = migrated.setdefault(
-                    self._group_of(v, ng),
-                    {"parts": {}, "shared": set(), "stale": {}},
-                )
-                g["parts"][v] = list(ds)
-                g["shared"].update(ds)
-            # stale entries follow each stale VALUE's group (a stale-only
-            # value may have no live partition entry — its group must
-            # still carry the filter)
-            for d, vs in doc.stale_map().items():
-                for v in vs:
-                    g = migrated.setdefault(
-                        self._group_of(v, ng),
-                        {"parts": {}, "shared": set(), "stale": {}},
-                    )
-                    g["stale"].setdefault(d, []).append(v)
+            # blob, and every migrated group must land in the new version
+            # file even if this commit doesn't touch it
+            migrated = self._regroup(doc, ng)
             doc = _VersionDoc(
                 self,
                 {
@@ -902,24 +869,10 @@ class SnapshotTable:
                     "props": doc.props,
                 },
             )
-            doc._group_cache = {
-                gid: {
-                    "parts": g["parts"],
-                    "shared": sorted(g["shared"]),
-                    "stale": g["stale"],
-                }
-                for gid, g in migrated.items()
-            }
-            # every migrated group must land in the new version file
-            # even if this commit doesn't touch it
-            forced_groups = set(migrated)
-        else:
-            forced_groups = set()
+            doc._group_cache = migrated
+            changed = {gid: [] for gid in migrated}
         groups_map = dict(doc.groups)
         shared_commit = len(values) > 1  # one dir backing many partitions
-        changed: dict[int, list[str]] = {}
-        for gid in forced_groups:
-            changed.setdefault(gid, [])
         for v in values:
             changed.setdefault(self._group_of(v, ng), []).append(v)
         removed: list[str] = []
@@ -965,17 +918,62 @@ class SnapshotTable:
             elif old_sha is not None:
                 freed.append([gid, old_sha])
                 del groups_map[str(gid)]
+        return self._sharded_payload(
+            new_version, ng, groups_map, new_props, removed, freed
+        )
+
+    @staticmethod
+    def _sharded_payload(version, n_groups, groups_map, props, removed, freed):
+        """A sharded version file: the manifest list plus this commit's
+        deletion ledger (see _gc_ledger)."""
         return json.dumps(
             {
-                "version": new_version,
+                "version": version,
                 "layout": "sharded",
-                "n_groups": ng,
+                "n_groups": n_groups,
                 "groups": groups_map,
-                "props": new_props,
+                "props": props,
                 "removed_dirs": sorted(set(removed)),
                 "freed_groups": freed,
             }
         ).encode()
+
+    def _regroup(self, doc: _VersionDoc, n_groups: int) -> dict[int, dict]:
+        """Every partition, stale entry and shared marker of ``doc``
+        regrouped under ``n_groups``: gid -> group content. A single-blob
+        doc never tracked which dirs back several partitions, so all of
+        its dirs are conservatively marked shared — never ledger-deleted;
+        vacuum() reclaims them once genuinely unreferenced."""
+        parts = doc.all_partitions()
+        if doc.layout == "sharded":
+            shared = {
+                d
+                for gid in doc.groups
+                for d in doc.group_content(int(gid)).get("shared", [])
+            }
+        else:
+            shared = {d for ds in parts.values() for d in ds}
+        grouped: dict[int, dict] = {}
+
+        def slot(v: str) -> dict:
+            return grouped.setdefault(
+                self._group_of(v, n_groups),
+                {"parts": {}, "shared": set(), "stale": {}},
+            )
+
+        for v, ds in parts.items():
+            g = slot(v)
+            g["parts"][v] = list(ds)
+            g["shared"].update(d for d in ds if d in shared)
+        # stale entries follow each stale VALUE's group (a stale-only
+        # value may have no live partition entry — its group must still
+        # carry the filter)
+        for d, vs in doc.stale_map().items():
+            for v in vs:
+                slot(v)["stale"].setdefault(d, []).append(v)
+        for g in grouped.values():
+            g["shared"] = sorted(g["shared"])
+        return grouped
 
     # ---- read --------------------------------------------------------------
 
@@ -1103,7 +1101,6 @@ class SnapshotTable:
         partition_values: Iterable[object],
         props: Mapping[str, object] | None = None,
         expected_version: int | None = None,
-        expected_max_id: int | None = None,
     ) -> Manifest:
         """Replace the listed partitions with ``df``'s rows, atomically.
 
@@ -1117,23 +1114,64 @@ class SnapshotTable:
         was computed from stale data and publishing it would silently drop
         the racing writer's rows — ``SnapshotConflictError`` is raised
         instead and the caller re-reads + re-merges (the reference gets this
-        serialization for free from Postgres row locks). ``expected_max_id``
-        guards the id ledger the same way: a caller that minted surrogate
-        ids above the max_id it read conflicts if ANY writer (any tenant)
-        advanced max_id since — otherwise two concurrent ingests could both
-        assign ids from the same base and collide across tenants.
+        serialization for free from Postgres row locks). Surrogate ids come
+        from ``reserve_id_block``; ``props["max_id"]`` is a floor for the
+        monotone id ledger, never a guard.
         """
         values = [str(v) for v in partition_values]
-        if expected_max_id is not None and self._seq_slots():
-            # fail BEFORE the expensive Spark stage; the authoritative
-            # (race-free) re-check runs under the write lock below — a
-            # reservation chain can appear mid-stage
-            raise IdModeError(
-                "this table's id space is governed by reserve_id_block "
-                "reservations; an expected_max_id-minting commit cannot "
-                "prove its ids are unclaimed. Reserve a block instead "
-                "of minting from max_id."
-            )
+
+        def check(doc: _VersionDoc) -> None:
+            if expected_version is None or doc.version == expected_version:
+                return
+            expected = self._doc_at(expected_version)
+            if expected is None or any(
+                doc.partitions_for(v) != expected.partitions_for(v)
+                for v in values
+            ):
+                raise SnapshotConflictError(
+                    f"partition(s) {values} changed since version "
+                    f"{expected_version} (now {doc.version}); re-read and "
+                    "retry the merge"
+                )
+
+        def encode(doc, version, _written, dir_name, new_props) -> bytes:
+            return self._encode_commit(doc, version, values, dir_name, new_props)
+
+        return self._stage_and_commit(df, check, encode, props)
+
+    def overwrite_all(
+        self, df: DataFrame, expected_version: int | None = None
+    ) -> Manifest:
+        """Full-table replace (tests/bootstrap and the auth layer's tiny
+        tables — never the ingest path).
+
+        ``expected_version`` is the read-modify-write guard: callers that
+        derived ``df`` from a snapshot read pass the version they read, and
+        a publish that landed in between raises ``SnapshotConflictError``
+        instead of silently dropping the racer's rows (the caller re-reads
+        and retries — see AuthService._rmw). The replaced partitions are
+        the values the write job itself observed."""
+
+        def check(doc: _VersionDoc) -> None:
+            if expected_version is not None and doc.version != expected_version:
+                raise SnapshotConflictError(
+                    f"table advanced to v{doc.version} since the caller "
+                    f"read v{expected_version}; re-read and retry"
+                )
+
+        return self._stage_and_commit(df, check, self._encode_replace_all)
+
+    def _stage_and_commit(
+        self, df: DataFrame, check, encode, props=None
+    ) -> Manifest:
+        """Stage ``df`` as a new data dir, then commit a version that
+        references it: the one write protocol behind every data write.
+
+        ``check(doc)`` runs under the write lock against the head doc and
+        raises ``SnapshotConflictError`` when the head moved in a way the
+        caller's data cannot survive. ``encode(doc, version, written,
+        dir_name, props)`` returns the version file's bytes; ``written``
+        is the sorted partition values the write job observed."""
         # ---- stage OUTSIDE the write lock ---------------------------------
         # The Spark job that materializes ``df`` is the expensive part of a
         # commit; holding the lock across it serialized every concurrent
@@ -1153,39 +1191,36 @@ class SnapshotTable:
         committed = False
         reached_commit = False
         try:
-            staged_df = self.cast_to_schema(df)
-            # max_id must come from the DATA, not the caller's row count:
-            # insert ids are id_base + row-index + 1 and the row index is
-            # sparse (monotonically_increasing_id puts partition p's rows
-            # at p·2^33+n), so assigned ids can exceed any count-derived
-            # bound — trusting the caller here let a later ingest
-            # re-assign live ids. Observed ON the write job itself
-            # (pyspark Observation): the metric folds over exactly the
-            # rows written, so it equals the previous read-back
-            # agg(max(id)) while deleting one Spark action per commit —
-            # pure fixed overhead on every ingest (max() is idempotent
-            # under task retry, so the accumulator-backed metric is
-            # retry-safe).
-            obs = None
-            if any(f.name == "id" for f in self.schema.fields):
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                staged_df = staged_df.observe(
-                    obs, F.max(F.col("id")).alias("_max_id")
-                )
-            staged_df.write.mode("overwrite").parquet(out)
-            data_max_id = obs.get["_max_id"] if obs is not None else None
+            # The written partition values and max_id are observed ON the
+            # write job itself (pyspark Observation), so they fold over
+            # exactly the rows written without a read-back action. max_id
+            # must come from the DATA, not the caller's row count: insert
+            # ids are id_base + row-index + 1 and the row index is sparse
+            # (monotonically_increasing_id puts partition p's rows at
+            # p·2^33+n), so assigned ids can exceed any count-derived bound
+            # — trusting the caller here let a later ingest re-assign live
+            # ids. Both metrics are idempotent under task retry (a set
+            # union and a max), so the accumulator-backed values are
+            # retry-safe.
+            obs = Observation()
+            metrics = [F.collect_set(self.partition_col).alias("_vals")]
+            if "id" in self.schema.fieldNames():
+                metrics.append(F.max("id").alias("_max_id"))
+            self.cast_to_schema(df).observe(obs, *metrics).write.mode(
+                "overwrite"
+            ).parquet(out)
+            seen = obs.get
+            written = sorted(str(v) for v in seen["_vals"] or [])
+            data_max_id = seen.get("_max_id")
             # ---- commit loop: manifest-only work per attempt ---------------
             # A losing writer REBASES instead of recomputing: on a version
             # collision (a racer that bypassed the in-process lock won the
             # conditional put), re-read the head and re-encode this commit's
-            # delta — "my partitions point at my staged dir" — onto it.
-            # The staged data never moves; only the few touched manifest
-            # groups are rewritten. Data-level staleness (the racer touched
-            # MY partitions, or the id ledger this merge minted from moved)
-            # still surfaces as SnapshotConflictError to the caller, whose
-            # re-merge is the one genuine data recompute.
+            # delta onto it. The staged data never moves; only the few
+            # touched manifest groups are rewritten. Data-level staleness
+            # (``check``: the racer touched data this write was derived
+            # from) still surfaces as SnapshotConflictError to the caller,
+            # whose re-merge is the one genuine data recompute.
             last: SnapshotConflictError | None = None
             for _rebase in range(_REBASE_MAX_ATTEMPTS):
                 if _rebase:
@@ -1195,48 +1230,7 @@ class SnapshotTable:
                     _rebase_backoff(_rebase)
                 with self._write_lock():
                     doc = self.current_doc()
-                    if (
-                        expected_version is not None
-                        and doc.version != expected_version
-                    ):
-                        expected = self._doc_at(expected_version)
-                        if expected is None or any(
-                            doc.partitions_for(v)
-                            != expected.partitions_for(v)
-                            for v in values
-                        ):
-                            raise SnapshotConflictError(
-                                f"partition(s) {values} changed since "
-                                f"version {expected_version} (now "
-                                f"{doc.version}); re-read and retry the "
-                                "merge"
-                            )
-                    if expected_max_id is not None and self._seq_slots():
-                        # MODE EXCLUSIVITY, enforced (r13 verdict ask #2):
-                        # this caller minted ids from the max_id it read,
-                        # but the table has an _IDSEQ reservation chain —
-                        # some writer holds a block ABOVE max_id that this
-                        # commit's guard cannot see, so "max_id unchanged"
-                        # no longer proves the minted ids are unclaimed.
-                        # Refuse loudly instead of overlapping silently.
-                        raise IdModeError(
-                            "this table's id space is governed by "
-                            "reserve_id_block reservations; an "
-                            "expected_max_id-minting commit cannot prove "
-                            "its ids are unclaimed. Reserve a block "
-                            "instead of minting from max_id."
-                        )
-                    if (
-                        expected_max_id is not None
-                        and int(doc.props.get("max_id", 0))
-                        != expected_max_id
-                    ):
-                        raise SnapshotConflictError(
-                            f"max_id advanced from {expected_max_id} to "
-                            f"{doc.props.get('max_id', 0)} since the merge "
-                            "was computed; re-read and retry (surrogate "
-                            "ids would collide)"
-                        )
+                    check(doc)
                     if not os.path.isdir(out) or not os.path.exists(
                         self._intent_path(dir_name)
                     ):
@@ -1254,10 +1248,7 @@ class SnapshotTable:
                             "commit (vacuum grace too aggressive?); re-stage"
                         )
                     new_version = doc.version + 1
-                    new_props = dict(doc.props)
-                    head_max_id = int(new_props.get("max_id", 0))
-                    if props:
-                        new_props.update(props)
+                    new_props = {**doc.props, **(props or {})}
                     if "max_id" in new_props or data_max_id is not None:
                         # the ledger is MONOTONE: a caller's floor (e.g. a
                         # reserved block top) must never lower it below a
@@ -1266,11 +1257,11 @@ class SnapshotTable:
                         # sparse-row-index overshoot
                         new_props["max_id"] = max(
                             int(new_props.get("max_id", 0)),
-                            head_max_id,
+                            int(doc.props.get("max_id", 0)),
                             int(data_max_id or 0),
                         )
-                    payload = self._encode_commit(
-                        doc, new_version, values, dir_name, new_props
+                    payload = encode(
+                        doc, new_version, written, dir_name, new_props
                     )
                     reached_commit = True
                     try:
@@ -1282,7 +1273,6 @@ class SnapshotTable:
                         # racer, nothing of ours is referenced; rebase
                         reached_commit = False
                         last = e
-                        continue
             if not committed:
                 raise last or SnapshotConflictError(
                     f"lost the version race {_REBASE_MAX_ATTEMPTS} times"
@@ -1328,8 +1318,7 @@ class SnapshotTable:
         publish carries that version as ``expected_version`` — an ingest that
         lands between the read and the publish makes the publish conflict
         (instead of silently rolling the partition back to pre-ingest data),
-        and the compaction retries against the new version. Compaction mints
-        no ids, so it does not guard max_id.
+        and the compaction retries against the new version.
         """
         for _attempt in range(5):
             if _attempt:
@@ -1338,15 +1327,13 @@ class SnapshotTable:
                 # the ingest merge loop (each attempt here is a full
                 # partition rewrite, so the budget stays small)
                 _rebase_backoff(_attempt)
-            manifest = self.current_manifest()
+            version = self.current_doc().version
             df = self.read(
-                spark,
-                partition_value,
-                version=manifest.version if manifest.version else None,
+                spark, partition_value, version=version or None
             ).coalesce(max(1, target_files))
             try:
                 return self.overwrite_partitions(
-                    df, [partition_value], expected_version=manifest.version
+                    df, [partition_value], expected_version=version
                 )
             except SnapshotConflictError:
                 continue
@@ -1354,98 +1341,6 @@ class SnapshotTable:
             f"compact({partition_value!r}) lost the publish race 5 times; "
             "a writer is continuously updating this partition"
         )
-
-    def overwrite_all(
-        self, df: DataFrame, expected_version: int | None = None
-    ) -> Manifest:
-        """Full-table replace (tests/bootstrap and the auth layer's tiny
-        tables — never the ingest path).
-
-        ``expected_version`` is the read-modify-write guard: callers that
-        derived ``df`` from a snapshot read pass the version they read, and
-        a publish that landed in between raises ``SnapshotConflictError``
-        instead of silently dropping the racer's rows (the caller re-reads
-        and retries — see AuthService._rmw)."""
-        # same stage-outside-lock + intent + rebase-loop structure as
-        # overwrite_partitions (see there for the why of each piece)
-        dir_name = (
-            f"v{self.current_doc().version + 1:06d}-{uuid.uuid4().hex[:8]}"
-        )
-        out = os.path.join(self.root, dir_name)
-        self._stage_intent(dir_name)
-        stop_keepalive = self._start_intent_keepalive(dir_name)
-        committed = False
-        reached_commit = False
-        try:
-            self.cast_to_schema(df).write.mode("overwrite").parquet(out)
-            spark = df.sparkSession
-            written = spark.read.schema(self.schema).parquet(out)
-            agg = written.agg(
-                F.collect_set(self.partition_col).alias("vals"),
-                F.max("id").alias("max_id"),
-            ).first()
-            vals = [str(v) for v in (agg["vals"] or [])]
-            data_max_id = (
-                agg["max_id"] if "id" in written.columns else None
-            )
-            last: SnapshotConflictError | None = None
-            for _rebase in range(_REBASE_MAX_ATTEMPTS):
-                if _rebase:
-                    _rebase_backoff(_rebase)  # see overwrite_partitions
-                with self._write_lock():
-                    doc = self.current_doc()
-                    if (
-                        expected_version is not None
-                        and doc.version != expected_version
-                    ):
-                        raise SnapshotConflictError(
-                            f"table advanced to v{doc.version} since the "
-                            f"caller read v{expected_version}; re-read "
-                            "and retry"
-                        )
-                    if not os.path.isdir(out) or not os.path.exists(
-                        self._intent_path(dir_name)
-                    ):
-                        # intent-gated like overwrite_partitions (see there)
-                        raise SnapshotConflictError(
-                            f"staged dir {dir_name} was reclaimed before "
-                            "commit (vacuum grace too aggressive?); "
-                            "re-stage"
-                        )
-                    new_version = doc.version + 1
-                    props = dict(doc.props)
-                    if data_max_id is not None:
-                        props["max_id"] = max(
-                            int(data_max_id), int(props.get("max_id", 0))
-                        )
-                    payload = self._encode_replace_all(
-                        doc, new_version, vals, dir_name, props
-                    )
-                    reached_commit = True
-                    try:
-                        self._commit_version(new_version, payload)
-                        committed = True
-                        break
-                    except SnapshotConflictError as e:
-                        reached_commit = False
-                        last = e
-                        continue
-            if not committed:
-                raise last or SnapshotConflictError(
-                    f"lost the version race {_REBASE_MAX_ATTEMPTS} times"
-                )
-        except BaseException as e:
-            # see overwrite_partitions: never delete the staged dir
-            # once the commit point may have succeeded
-            if not committed and (
-                not reached_commit or isinstance(e, SnapshotConflictError)
-            ):
-                shutil.rmtree(out, ignore_errors=True)
-            raise
-        finally:
-            stop_keepalive()
-            self._clear_intent(dir_name)
-        return _DocManifest(self.current_doc())
 
     def _encode_replace_all(
         self,
@@ -1494,17 +1389,9 @@ class SnapshotTable:
                 },
                 new_version,
             )
-        return json.dumps(
-            {
-                "version": new_version,
-                "layout": "sharded",
-                "n_groups": ng,
-                "groups": groups_map,
-                "props": props,
-                "removed_dirs": sorted(set(removed)),
-                "freed_groups": freed,
-            }
-        ).encode()
+        return self._sharded_payload(
+            new_version, ng, groups_map, props, removed, freed
+        )
 
     # ---- maintenance ---------------------------------------------------------
 
@@ -1544,59 +1431,18 @@ class SnapshotTable:
         with self._write_lock():
             doc = self.current_doc()
             new_version = doc.version + 1
-            parts = doc.all_partitions()
-            stale = doc.stale_map()
-            if doc.layout == "sharded":
-                shared: set[str] = set()
-                for gid in doc.groups:
-                    shared.update(
-                        doc.group_content(int(gid)).get("shared", [])
-                    )
-                freed = [
-                    [int(g), sha] for g, sha in sorted(doc.groups.items())
-                ]
-            else:
-                # single-blob predecessor: per-dir ownership was never
-                # tracked — mark everything shared (vacuum reclaims)
-                shared = {d for ds in parts.values() for d in ds}
-                freed = []
-            grouped: dict[int, dict] = {}
-
-            def slot(v: str) -> dict:
-                return grouped.setdefault(
-                    self._group_of(v, new_groups),
-                    {"parts": {}, "shared": set(), "stale": {}},
+            groups_map = {
+                str(gid): self._write_group(gid, content, new_version)
+                for gid, content in sorted(
+                    self._regroup(doc, new_groups).items()
                 )
-
-            for v, ds in parts.items():
-                g = slot(v)
-                g["parts"][v] = list(ds)
-                g["shared"].update(d for d in ds if d in shared)
-            for d, vs in stale.items():
-                for v in vs:
-                    slot(v)["stale"].setdefault(d, []).append(v)
-            groups_map: dict[str, str] = {}
-            for gid, g in sorted(grouped.items()):
-                groups_map[str(gid)] = self._write_group(
-                    gid,
-                    {
-                        "parts": g["parts"],
-                        "shared": sorted(g["shared"]),
-                        "stale": g["stale"],
-                    },
-                    new_version,
-                )
-            payload = json.dumps(
-                {
-                    "version": new_version,
-                    "layout": "sharded",
-                    "n_groups": new_groups,
-                    "groups": groups_map,
-                    "props": dict(doc.props),
-                    "removed_dirs": [],
-                    "freed_groups": freed,
-                }
-            ).encode()
+            }
+            # the old group files ride this version's freed ledger (a
+            # single-blob predecessor has none)
+            freed = [[int(g), sha] for g, sha in sorted(doc.groups.items())]
+            payload = self._sharded_payload(
+                new_version, new_groups, groups_map, dict(doc.props), [], freed
+            )
             self._commit_version(new_version, payload)
             # keep the handle consistent for paths that still consult
             # the constructor value (fresh migrations, replace-all)
@@ -1641,34 +1487,20 @@ class SnapshotTable:
         call runs. Bounded (a few hundred bytes), but vacuum is the
         only reclaimer once writers stop."""
         with self._write_lock():
-            latest = self.current_doc().version
             # a crash between commit point and pointer publish can leave
             # a committed version ABOVE the pointer (see recover()) —
-            # its artifacts are live, so the sweep's live set must span
-            # up to the true max committed version, not the pointer
-            latest = max(latest, self._max_committed_version())
-            horizon = latest - self.keep_versions
-            live_dirs: set[str] = set()
-            live_groups: set[str] = set()
-            live_manifests: set[str] = set()
-            for v in range(max(1, horizon), latest + 1):
-                doc = self._doc_at(v)
-                if doc is None:
-                    continue
-                live_manifests.add(os.path.basename(self._manifest_path(v)))
-                for dirs in doc.all_partitions().values():
-                    live_dirs.update(dirs)
-                for gid, sha in doc.groups.items():
-                    live_groups.add(
-                        os.path.basename(self._group_path(int(gid), sha))
-                    )
+            # its artifacts are live, so the horizon and the live set
+            # count from the true max committed version, not the pointer
+            horizon = (
+                max(self.current_doc().version, self._max_committed_version())
+                - self.keep_versions
+            )
             stats = {"dirs": 0, "groups": 0, "manifests": 0, "litter": 0}
-            keep_files = {_MANIFEST, _MANIFEST + ".lock"} | live_manifests
             now = time.time()
-            # dir listing FIRST, intent listing second — same ordering
-            # argument as _gc_full_sweep: a stage landing between the
-            # two listings is then either intent-shielded or absent
-            # from the dir snapshot, never a sweepable half-written dir
+            # dir listing FIRST, intent listing second: staging puts the
+            # intent before the dir, so a stage landing between the two
+            # listings is either intent-shielded or absent from the dir
+            # snapshot, never a sweepable half-written dir
             listing = self.committer.list_prefix(self.root, "")
             fresh_intents: set[str] = set()  # dir names under live stage
             for name in self.committer.list_prefix(
@@ -1687,25 +1519,14 @@ class SnapshotTable:
                     with contextlib.suppress(OSError):
                         os.unlink(full)
                     stats["litter"] += 1
-            # cross-host lock-bypassing racer guard, as in
-            # _gc_full_sweep: extend the live set to any version
-            # committed after the initial scan (its intent was alive at
-            # the intent listing above if it committed later still)
-            true_latest = self._max_committed_version()
-            for v in range(latest + 1, true_latest + 1):
-                doc = self._doc_at(v)
-                if doc is None:
-                    continue
-                live_manifests.add(
-                    os.path.basename(self._manifest_path(v))
-                )
-                keep_files.add(os.path.basename(self._manifest_path(v)))
-                for dirs in doc.all_partitions().values():
-                    live_dirs.update(dirs)
-                for gid, sha in doc.groups.items():
-                    live_groups.add(
-                        os.path.basename(self._group_path(int(gid), sha))
-                    )
+            # the live set spans up to the true committed head derived
+            # AFTER both listings: a lock-bypassing racer's version
+            # committed by now is in it, and one committed later still
+            # had its intent alive at the intent listing above
+            live_dirs, live_groups, live_manifests = self._live_refs(
+                range(max(1, horizon), self._max_committed_version() + 1)
+            )
+            keep_files = {_MANIFEST, _MANIFEST + ".lock"} | live_manifests
             seq_head = self._seq_head()[0]
 
             def _aged_out(path: str) -> bool:

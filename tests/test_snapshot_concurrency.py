@@ -95,19 +95,6 @@ def test_other_partition_advance_does_not_conflict(spark, tmp_path):
     assert {r["sku"] for r in t.read(spark, 2).collect()} == {"X"}
 
 
-def test_expected_max_id_guards_id_ledger(spark, tmp_path):
-    """Any writer advancing max_id after our read conflicts an id-minting
-    publish (ids computed from the stale base would collide)."""
-    t = SnapshotTable(str(tmp_path / "t"), CLIENT_PRODUCTS_SCHEMA)
-    t.overwrite_partitions(_df(spark, 1, ["A"]), [1], props={"max_id": 10})
-    base = int(t.current_manifest().props["max_id"])
-    t.overwrite_partitions(_df(spark, 2, ["X"]), [2], props={"max_id": 20})
-    with pytest.raises(SnapshotConflictError):
-        t.overwrite_partitions(
-            _df(spark, 1, ["B"]), [1], expected_max_id=base
-        )
-
-
 def test_concurrent_same_client_ingests_both_land(spark, tmp_path):
     """VERDICT r3 #2 done-check: two threads ingesting the same client
     concurrently must BOTH have their rows in the final snapshot (the loser
@@ -742,68 +729,47 @@ def test_intent_keepalive_refreshes_mtime(spark, tmp_path, monkeypatch):
     assert os.stat(path).st_mtime <= old + 1
 
 
-def test_expected_max_id_refused_once_table_reserves(spark, tmp_path):
-    """Verdict r13 ask #2: mixing id-minting modes is REFUSED, not
-    documented — a legacy expected_max_id writer on a table with an
-    _IDSEQ chain gets IdModeError (loud, non-retriable), never
-    overlapping ids."""
-    from client_data_ingester_spark.tables import IdModeError
-
-    t = SnapshotTable(str(tmp_path / "t"), CLIENT_PRODUCTS_SCHEMA)
-    t.overwrite_partitions(_df(spark, 1, ["A"]), [1])
-    base = int(t.current_manifest().props["max_id"])
-    t.reserve_id_block(10)  # the table is now reservation-governed
-    with pytest.raises(IdModeError):
-        t.overwrite_partitions(
-            _df(spark, 1, ["B"]), [1], expected_max_id=base
-        )
-    # IdModeError is not a retriable conflict
-    assert not issubclass(IdModeError, SnapshotConflictError)
-    # nothing was staged or committed by the refused writer
-    assert t.current_manifest().version == 1
-    assert {r["sku"] for r in t.read(spark, 1).collect()} == {"A"}
-
-
-def test_expected_max_id_refused_when_reservation_lands_mid_stage(
+def test_expected_version_conflict_mid_stage_cleans_up(
     spark, tmp_path, monkeypatch
 ):
-    """The authoritative mode check runs UNDER the write lock: a
-    reservation chain appearing after the legacy writer's pre-stage
-    check (it passed: no slots yet) still refuses the commit."""
-    from client_data_ingester_spark.tables import IdModeError
-
+    """The expected_version check runs UNDER the write lock: a racer
+    that commits the same partition while this writer's Spark stage runs
+    refuses the commit, the refused writer's staged dir is removed and
+    the version does not move past the racer's."""
     t = SnapshotTable(str(tmp_path / "t"), CLIENT_PRODUCTS_SCHEMA)
     t.overwrite_partitions(_df(spark, 1, ["A"]), [1])
-    base = int(t.current_manifest().props["max_id"])
-    real_slots = type(t)._seq_slots
+    read_version = t.current_doc().version
+    real_cast = type(t).cast_to_schema
     calls = {"n": 0}
 
-    def racing_slots(self):
+    def racing_cast(self, df):
         calls["n"] += 1
         if calls["n"] == 1:
-            # pre-stage check sees a clean table; a reserver lands while
-            # the legacy writer's Spark stage runs
-            self.reserve_id_block(5)
-            return []
-        return real_slots(self)
+            # the racer stages and commits partition 1 inside this
+            # writer's stage
+            self.overwrite_partitions(_df(spark, 1, ["A", "R"]), [1])
+        return real_cast(self, df)
 
-    dirs_before = {
-        d for d in os.listdir(t.root)
-        if os.path.isdir(os.path.join(t.root, d))
-    }
-    monkeypatch.setattr(type(t), "_seq_slots", racing_slots)
-    with pytest.raises(IdModeError):
+    monkeypatch.setattr(type(t), "cast_to_schema", racing_cast)
+    with pytest.raises(SnapshotConflictError):
         t.overwrite_partitions(
-            _df(spark, 1, ["B"]), [1], expected_max_id=base
+            _df(spark, 1, ["B"]), [1], expected_version=read_version
         )
     monkeypatch.undo()
-    # the refused writer's staged dir was cleaned up (commit never won)
-    assert t.current_manifest().version == 1
-    dirs_after = {
+    assert calls["n"] == 2
+    assert t.current_doc().version == read_version + 1  # the racer's
+    # the refused writer's staged dir and intent were cleaned up: only
+    # the dirs the two committed versions reference remain
+    dirs = {
         d for d in os.listdir(t.root)
         if os.path.isdir(os.path.join(t.root, d))
     }
-    assert dirs_after == dirs_before
+    assert dirs == {
+        d for v in (1, 2) for ds in t._manifest_at(v).partitions.values()
+        for d in ds
+    }
+    assert not [n for n in os.listdir(t.root) if n.startswith("_STAGING.")]
+    assert {r["sku"] for r in t.read(spark, 1).collect()} == {"A", "R"}
 
 
 def test_reserving_writers_unaffected_by_mode_guard(spark, tmp_path):
